@@ -18,3 +18,9 @@ chunk-invariance (SURVEY.md §1.2) is what makes the batch formulation the
 """
 
 __version__ = "0.1.0"
+
+# Every engine function that runs in a Spark Python worker imports this
+# package there, so the worker's per-task zip re-reads stop (zipguard.py).
+from ezmsg_sigproc_spark import zipguard as _zipguard  # noqa: E402
+
+_zipguard.install()

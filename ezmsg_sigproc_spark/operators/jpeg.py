@@ -248,6 +248,8 @@ class _BitReader:
     def receive(self, n: int) -> int:
         if n == 0:
             return 0
+        if n > 16:  # a crafted DC size category; the window holds 16 bits
+            raise ValueError("magnitude field over 16 bits")
         p = self.pos
         self.pos = p + n
         if self.pos > self.nbits:
@@ -379,16 +381,18 @@ def _parse_headers(payload: bytes):
     return frame, huff_dc, huff_ac, restart_interval, scan, i
 
 
-_NATIVE_PACKS: dict[tuple, tuple] = {}
+_NATIVE_PACKS: dict[tuple, tuple[tuple, tuple]] = {}
 
 
 def _native_pack(tables: list[_Huff]) -> tuple:
     """Flattened int32/bytes views of a table set for the C kernel, cached
     by table identity (tables are content-cached in _HUFF_CACHE, so real
-    corpora hit one pack per table-set, not one per payload)."""
+    corpora hit one pack per table-set, not one per payload). The entry
+    holds the tables themselves: while it exists their ids cannot be reused
+    by tables built after _HUFF_CACHE drops them."""
     key = tuple(id(t) for t in tables)
-    pack = _NATIVE_PACKS.get(key)
-    if pack is None:
+    entry = _NATIVE_PACKS.get(key)
+    if entry is None:
         if len(_NATIVE_PACKS) >= 64:
             _NATIVE_PACKS.clear()
         dc = np.concatenate([t.dc_np.astype(np.int32) for t in tables])
@@ -406,9 +410,9 @@ def _native_pack(tables: list[_Huff]) -> tuple:
             offs.append(o)
             o += len(t.vals)
         off = np.array(offs, dtype=np.int32)
-        pack = (dc, ac, l256, mn, mx, vp, vals_all, off)
-        _NATIVE_PACKS[key] = pack
-    return pack
+        entry = (tuple(tables), (dc, ac, l256, mn, mx, vp, vals_all, off))
+        _NATIVE_PACKS[key] = entry
+    return entry[1]
 
 
 def _decode_segments_native(segs, ctx, comps, zz_all, mcus_x, n_mcus,

@@ -18,9 +18,10 @@ ctypes quirks) leaves `lib() is None` and callers fall back to the Python
 loop — behavior is unchanged, only slower. `EZSP_JPEG_NATIVE=0` forces
 the fallback (used by the parity tests to pin the pure-Python route).
 
-The .so is cached per source-hash under the system temp dir, so executor
-worker processes on one host compile once and share; a stale cache from
-an older source version misses the hash and rebuilds.
+The .so is cached per source-hash in a per-user 0700 directory under the
+system temp dir (native_build), so executor worker processes on one host
+compile once and share; a stale cache from an older source version misses
+the hash and rebuilds.
 """
 
 from __future__ import annotations
@@ -74,11 +75,12 @@ static int huff_decode(const uint8_t *buf, int64_t nbits, const table_t *t,
     return t->vals[t->valptr[ln] + code - t->mincode[ln]];
 }
 
-/* _BitReader.receive */
+/* _BitReader.receive; -5 for n > 16, whose shift would be undefined */
 static int64_t recv_bits(const uint8_t *buf, int64_t nbits, int64_t *pos,
                          int n, int *err)
 {
     if (n == 0) return 0;
+    if (n > 16) { *err = -5; return 0; }
     int64_t p = *pos;
     if (p + n > nbits) { *err = -1; return 0; }
     *pos = p + n;
@@ -89,7 +91,8 @@ static int64_t recv_bits(const uint8_t *buf, int64_t nbits, int64_t *pos,
 /* One restart segment of the single interleaved baseline scan, writing
    quantized coefficients (zigzag order) densely into each component's
    (nblocks x 64) int32 buffer. Returns 0, or -1 segment exhausted,
-   -2 AC run past block end, -3 invalid Huffman code. */
+   -2 AC run past block end, -3 invalid Huffman code, -5 magnitude field
+   over 16 bits. */
 int64_t decode_segment(
     const uint8_t *buf, int64_t nbits,
     int64_t n_scan,
@@ -197,6 +200,7 @@ _ERRORS = {
     -2: "AC run past block end",
     -3: "invalid Huffman code",
     -4: "too many tables/components for the native kernel",
+    -5: "magnitude field over 16 bits",
 }
 
 _lib = None

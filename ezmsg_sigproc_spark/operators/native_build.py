@@ -5,10 +5,13 @@ Each kernel module owns its C source (a translation of its module's
 Python hot loop — the algorithms stay defined, documented and tested in
 Python; the C is the speed mirror) and calls :func:`load` once. Contract:
 
-- the .so is cached under the system temp dir keyed by (uid, source
-  hash), built via ``$CC``/``cc -O2 -shared -fPIC`` with an atomic
-  rename, so concurrent executor workers on one host build once and a
-  stale cache from an older source misses the hash and rebuilds;
+- the .so is cached in a per-user directory, ``ezsp-native-<uid>`` under
+  the system temp dir, created with mode 0700 and keyed by source hash.
+  It is built via ``$CC``/``cc -O2 -shared -fPIC`` with an atomic rename,
+  so concurrent executor workers on one host build once and a stale cache
+  from an older source misses the hash and rebuilds;
+- a cache directory or .so that another user owns, or that group or other
+  can write, is never dlopen'd: the kernel counts as unavailable;
 - ANY failure (no compiler, noexec tmp, hardened env) returns None and
   the caller's pure-Python path runs unchanged — kernels only ever
   change speed, never results (parity pytest-pinned per kernel);
@@ -26,17 +29,35 @@ import sys
 import tempfile
 
 
+def _check_private(path: str, forbidden_mode: int) -> None:
+    """Raise unless ``path`` itself (not a symlink's target) is owned by
+    this uid and has none of the ``forbidden_mode`` bits."""
+    st = os.lstat(path)
+    if st.st_uid != os.getuid() or st.st_mode & forbidden_mode:
+        raise PermissionError(
+            f"{path} is not private to uid {os.getuid()} "
+            f"(owner {st.st_uid}, mode {oct(st.st_mode & 0o7777)})")
+
+
+def so_path(name: str, src: str) -> str:
+    """Where the kernel built from ``src`` is cached; creates and checks
+    the per-user cache directory."""
+    d = os.path.join(tempfile.gettempdir(), f"ezsp-native-{os.getuid()}")
+    os.makedirs(d, mode=0o700, exist_ok=True)
+    _check_private(d, 0o077)
+    h = hashlib.sha1(src.encode()).hexdigest()[:16]
+    return os.path.join(d, f"{name}_{h}.so")
+
+
 def load(name: str, src: str, env_flag: str):
     """Compile-or-reuse and dlopen the kernel; None when unavailable or
     disabled. Never raises."""
     if os.environ.get(env_flag, "1") == "0":
         return None
     try:
-        h = hashlib.sha1(src.encode()).hexdigest()[:16]
-        uid = os.getuid() if hasattr(os, "getuid") else 0
-        so = os.path.join(tempfile.gettempdir(), f"ezsp_{name}_{uid}_{h}.so")
+        so = so_path(name, src)
         if not os.path.exists(so):
-            with tempfile.TemporaryDirectory() as td:
+            with tempfile.TemporaryDirectory(dir=os.path.dirname(so)) as td:
                 c = os.path.join(td, f"{name}.c")
                 with open(c, "w") as f:
                     f.write(src)
@@ -44,7 +65,9 @@ def load(name: str, src: str, env_flag: str):
                 cc = os.environ.get("CC", "cc")
                 subprocess.run([cc, "-O2", "-shared", "-fPIC", "-o", tmp, c],
                                check=True, capture_output=True, timeout=120)
+                os.chmod(tmp, 0o700)  # whatever the umask
                 os.replace(tmp, so)  # atomic; concurrent builds are identical
+        _check_private(so, 0o022)
         return ctypes.CDLL(so)
     except Exception as e:
         sys.stderr.write(f"{name} kernel unavailable ({e!r}); "

@@ -58,10 +58,9 @@ def map_key_batches(
     key_cols = list(key_cols)
     if num_partitions is None:
         # one partition per core, not 2×: every partition is a Python-stage
-        # task whose JVM↔worker round trip costs ~10 ms regardless of size
-        # (measured: an identity mapInPandas over this exchange takes 0.35 s
-        # at 32 tasks and 0.7 s at 64 on the same 100k rows), so
-        # oversubscription doubles the boundary cost for balance the skew
+        # task with a fixed worker CPU cost regardless of size (session.py:
+        # ~20 ms per task with the package's zip guard, ~0.2 s without), so
+        # oversubscription doubles that cost for balance the skew
         # paths (salted_repartition, the pivot cap) already provide
         # explicitly. At cluster scale partitions-per-core stays the unit the
         # AQE parallelismFirst floor targets; callers needing a wider fan-out

@@ -139,6 +139,15 @@ def _bucket_writer(staging: str):
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
+        # this closure is pickled by value and references nothing else of
+        # the engine: import the package so the worker gets its zip guard.
+        # The writer itself needs nothing of it, so a worker that cannot
+        # import the package still writes, only without the guard.
+        try:
+            import ezmsg_sigproc_spark  # noqa: F401
+        except ImportError:
+            pass
+
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
         counts: dict[int, int] = {}
@@ -213,54 +222,62 @@ class RollupStore:
         self.last_write_phases: dict[str, dict] = {}
 
     # -- lineage ----------------------------------------------------------
-    def completed_buckets(self, tier: str) -> set[int]:
-        # Count only VISIBLE parquet files: _append_lineage stages each file
-        # as a dot-prefixed .tmp before its atomic rename, and a directory
+    def _lineage_files(self) -> list[str]:
+        # Only VISIBLE parquet files: _write_lineage stages each file as a
+        # dot-prefixed .tmp before its atomic rename, and a directory
         # holding only such a tmp is non-empty to os.listdir but EMPTY to
         # Spark's listing — reading it raised UNABLE_TO_INFER_SCHEMA (race
         # found by tools/stress_concurrent_writers.py, 2-in-50 under two
         # overlapping writers). A file visible here is always complete
-        # (atomic rename), so the read below can never see a partial.
+        # (atomic rename), so a read can never see a partial.
         if not os.path.isdir(self.lineage_dir):
-            return set()
-        visible = [f for f in os.listdir(self.lineage_dir)
-                   if f.endswith(".parquet") and not f.startswith((".", "_"))]
-        if not visible:
-            return set()
+            return []
+        return [f for f in os.listdir(self.lineage_dir)
+                if f.endswith(".parquet") and not f.startswith((".", "_"))]
+
+    def completed_buckets(self, tier: str) -> set[int]:
         # lineage is driver-side metadata (a few hundred tiny rows): read the
         # visible files directly with pyarrow instead of launching a Spark
         # read job — the old Spark path cost 0.2-0.5 s of job round trips per
         # write_tier commit at sf0.1, pyarrow ~10 ms (the same asymmetry as
-        # _append_lineage, which always wrote with pyarrow).
-        out: set[int] = set()
-        for f in visible:
-            t = pq.read_table(os.path.join(self.lineage_dir, f),
-                              columns=["tier", "ts_bucket"])
-            out.update(
-                t.filter(pc.equal(t.column("tier"), tier))
-                .column("ts_bucket").to_pylist())
-        return out
+        # _write_lineage, which always wrote with pyarrow).
+        while True:
+            out: set[int] = set()
+            try:
+                for f in self._lineage_files():
+                    t = pq.read_table(os.path.join(self.lineage_dir, f),
+                                      columns=["tier", "ts_bucket"])
+                    out.update(
+                        t.filter(pc.equal(t.column("tier"), tier))
+                        .column("ts_bucket").to_pylist())
+                return out
+            except FileNotFoundError:
+                # a concurrent reopen_buckets deleted a listed file; the
+                # file replacing it was written first, so a re-list sees it
+                continue
+
+    def _write_lineage(self, table: pa.Table):
+        # write-temp + atomic rename: a concurrent completed_buckets read
+        # must never see a half-written parquet file (the dot-prefixed temp
+        # is invisible to parquet directory listings)
+        os.makedirs(self.lineage_dir, exist_ok=True)
+        fname = (f"lineage-{int(time.time() * 1e6)}-{os.getpid()}-"
+                 f"{uuid.uuid4().hex[:8]}.parquet")
+        tmp = os.path.join(self.lineage_dir, "." + fname + ".tmp")
+        pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(self.lineage_dir, fname))
 
     def _append_lineage(self, tier: str, stats: list[tuple[int, int]]):
         # lineage rows are driver-side metadata (the Iceberg-manifest analog):
         # written directly with pyarrow — a Spark job for a few hundred tiny
         # rows costs seconds of Python-RDD worker round-trips, pyarrow ~10 ms.
-        # Still plain parquet, so completed_buckets reads it back with Spark.
         now = float(time.time())
-        table = pa.table({
+        self._write_lineage(pa.table({
             "tier": pa.array([tier] * len(stats), pa.string()),
             "ts_bucket": pa.array([int(b) for b, _ in stats], pa.int64()),
             "n_rows": pa.array([int(n) for _, n in stats], pa.int64()),
             "written_at": pa.array([now] * len(stats), pa.float64()),
-        })
-        os.makedirs(self.lineage_dir, exist_ok=True)
-        fname = f"lineage-{int(now * 1e6)}-{os.getpid()}-{uuid.uuid4().hex[:8]}.parquet"
-        # write-temp + atomic rename: a concurrent completed_buckets read
-        # must never see a half-written parquet file (the dot-prefixed temp
-        # is invisible to parquet directory listings)
-        tmp = os.path.join(self.lineage_dir, "." + fname + ".tmp")
-        pq.write_table(table, tmp)
-        os.rename(tmp, os.path.join(self.lineage_dir, fname))
+        }))
 
     # -- write ------------------------------------------------------------
     def write_tier(self, tier: str, rollup: DataFrame, resume: bool = True) -> dict:
@@ -281,8 +298,8 @@ class RollupStore:
         per bucket — rows arriving for a bucket already committed to lineage
         are intentionally not re-ingested. ``resume=False`` recomputes the
         tier but still never deletes a lineage-committed bucket; to genuinely
-        reprocess committed buckets use :meth:`reopen_buckets` (drops the
-        bucket data and its lineage rows together) or a fresh root.
+        reprocess committed buckets use :meth:`reopen_buckets` (removes the
+        buckets' lineage rows, then their data) or a fresh root.
 
         CONCURRENT writers are safe under the same immutable-input-per-bucket
         assumption (two attempts at the same bucket produce identical
@@ -364,7 +381,7 @@ class RollupStore:
             # lineage-listed bucket was absent on disk and a concurrent
             # read silently lost its rows. Skip instead; the winner stands.
             # (Genuine reprocessing of changed input goes through
-            # ``reopen_buckets``, which drops data + lineage together.)
+            # ``reopen_buckets``, which un-commits a bucket, then drops it.)
             for d in os.listdir(staging):
                 if not d.startswith("ts_bucket="):
                     continue
@@ -410,53 +427,58 @@ class RollupStore:
     # -- late data --------------------------------------------------------
     def reopen_buckets(self, tier: str, buckets: list[int]) -> int:
         """Reopen committed buckets for reprocessing (late-arriving rows):
-        drop the bucket directories AND their lineage rows, so the next
-        resumed run re-ingests exactly those buckets. The lineage table is
-        rewritten via temp-dir + atomic swap (same crash-safety discipline as
-        write_tier: a failure leaves either the old lineage or the new one,
-        never a half state — though a crash after the data drop and before
-        the swap means the reopened buckets are simply re-done, which is the
-        intended outcome anyway). Returns the number of buckets reopened.
+        remove their lineage rows, THEN drop their data, so the next resumed
+        run re-ingests exactly those buckets. Returns the number of buckets
+        reopened.
 
-        Lineage is driver-side metadata (a few hundred tiny rows), so the
-        rewrite is pyarrow like completed_buckets/_append_lineage — the
-        Spark coalesce(1) job this replaces cost seconds of worker round
-        trips for the same result (cold path, but there was no reason to
-        keep the asymmetry). Same visibility filter as completed_buckets:
-        a dot-prefixed .tmp from a concurrent _append_lineage is skipped
-        (it either reappears in the new lineage via its own rename — the
-        swap preserves nothing staged — or its writer's rename loses to
-        ours; both end states are a consistent table, and concurrent
-        reopen+write of the SAME bucket is outside the store's contract
-        anyway)."""
+        Each step keeps the store's rule that a bucket listed in lineage is
+        fully present on disk:
+
+        1. Un-commit. The lineage rows that remain are written as one new
+           visible lineage file (temp + atomic rename), and only then are
+           the files it replaces deleted. The lineage directory never goes
+           missing, a lineage file appended concurrently is not among those
+           deleted, and a crash part-way leaves every reopened bucket either
+           still committed or un-committed (lineage reads as a set, so the
+           duplicated rows are harmless).
+        2. Drop. Each bucket directory is renamed into ``_staging`` (atomic;
+           readers never look there) and deleted from there.
+
+        A crash between the two steps leaves a bucket's OLD data on disk but
+        not in lineage. A resumed write_tier never replaces an existing
+        bucket directory, so it would adopt that old data as committed:
+        re-run the crashed reopen_buckets call before resuming. The call is
+        idempotent, and a bucket already un-committed still has its data
+        dropped. Lineage is rewritten with pyarrow, like completed_buckets
+        and _write_lineage. Concurrent reopen_buckets calls on one store,
+        and a reopen concurrent with a write of the same bucket, are outside
+        the store's contract."""
         buckets = [int(b) for b in buckets]
         if not buckets:
             return 0
+        visible = self._lineage_files()
+        if visible:
+            lin = pa.concat_tables([
+                pq.read_table(os.path.join(self.lineage_dir, f)) for f in visible])
+            drop = pc.and_(
+                pc.equal(lin.column("tier"), tier),
+                pc.is_in(lin.column("ts_bucket"),
+                         value_set=pa.array(buckets, pa.int64())))
+            if pc.any(drop).as_py():
+                kept = lin.filter(pc.invert(drop))
+                if kept.num_rows:
+                    self._write_lineage(kept)
+                for f in visible:
+                    os.remove(os.path.join(self.lineage_dir, f))
         tier_dir = os.path.join(self.root, f"tier={tier}")
+        trash = os.path.join(self.root, "_staging",
+                             f"reopen-{uuid.uuid4().hex[:8]}")
+        os.makedirs(trash, exist_ok=True)
         for b in buckets:
-            shutil.rmtree(os.path.join(tier_dir, f"ts_bucket={b}"), ignore_errors=True)
-        if not os.path.isdir(self.lineage_dir):
-            return len(buckets)
-        visible = [f for f in os.listdir(self.lineage_dir)
-                   if f.endswith(".parquet") and not f.startswith((".", "_"))]
-        if not visible:
-            return len(buckets)
-        lin = pa.concat_tables([
-            pq.read_table(os.path.join(self.lineage_dir, f)) for f in visible])
-        drop = pc.and_(
-            pc.equal(lin.column("tier"), tier),
-            pc.is_in(lin.column("ts_bucket"),
-                     value_set=pa.array(buckets, pa.int64())))
-        kept = lin.filter(pc.invert(drop))
-        tmp = self.lineage_dir + "._rewrite"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
-        pq.write_table(kept, os.path.join(tmp, "lineage-rewritten.parquet"))
-        old = self.lineage_dir + "._old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(self.lineage_dir, old)
-        os.rename(tmp, self.lineage_dir)
-        shutil.rmtree(old, ignore_errors=True)
+            src = os.path.join(tier_dir, f"ts_bucket={b}")
+            if os.path.isdir(src):
+                os.rename(src, os.path.join(trash, str(b)))
+        shutil.rmtree(trash)
         return len(buckets)
 
     # -- retention --------------------------------------------------------

@@ -4,6 +4,15 @@ Local-mode defaults mirror what we'd set on a real cluster: AQE on (runtime
 re-plan, skew-join splitting, partition coalescing), Arrow enabled for every
 pandas-UDF kernel, UTC session timezone so epoch math is unambiguous, and
 shuffle partitions sized to the core count instead of the 200 default.
+
+Every Python-stage task (mapInArrow, mapInPandas, applyInPandas) costs its
+worker a fixed amount of CPU, whatever its size, so the engine sizes Python
+stages in tasks per core. Measured with an identity ``mapInArrow`` over 8
+one-row partitions at ``local[4]`` on a 4-vCPU host (Python 3.11, pyspark
+imported by the workers from ``pyspark.zip``): 1.25–1.78 worker CPU-s per
+job (~0.2 s per task) before the package's zip guard, 0.14–0.20 CPU-s
+(~20 ms per task) with it. Almost all of the difference was the workers
+re-reading ``pyspark.zip``'s directory on every task (see ``zipguard.py``).
 """
 
 from __future__ import annotations

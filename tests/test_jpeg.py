@@ -294,3 +294,67 @@ def test_native_kernel_parity_with_python_loop():
         _j._decode_segments_native = orig
     assert native_err == python_err
     assert any(e is not None for e in native_err)  # truncation really bites
+
+
+def test_native_pack_cache_survives_table_churn():
+    """_native_pack caches by table identity. When _HUFF_CACHE drops its
+    tables, CPython reuses their addresses for new tables; a cache entry
+    that did not keep its tables alive then served another table's LUTs.
+    3000 distinct random canonical tables must each get their own pack."""
+    from ezmsg_sigproc_spark.operators.jpeg import _huff_cached, _native_pack
+
+    rng = np.random.default_rng(11)
+    stale = 0
+    for _ in range(3000):
+        bits, kraft = [0] * 16, 0.0
+        for _ in range(int(rng.integers(1, 24))):
+            ln = int(rng.integers(2, 17))
+            if kraft + 2.0 ** -ln < 1.0:
+                bits[ln - 1] += 1
+                kraft += 2.0 ** -ln
+        vals = bytes(rng.permutation(256)[: sum(bits)].astype(np.uint8))
+        t = _huff_cached(bits, vals)
+        dc, ac, l256, mn, mx, vp, vals_all, _ = _native_pack([t])
+        if not (vals_all == t.vals
+                and np.array_equal(l256, t.lut)
+                and np.array_equal(dc, t.dc_np)
+                and np.array_equal(ac, t.ac_np)
+                and list(mx) == t.maxcode):
+            stale += 1
+    assert stale == 0
+
+
+def test_dc_size_over_16_bits_same_error_on_both_paths():
+    """A crafted DHT whose DC table maps a code to size category 17 asks
+    the bit reader for a 17-bit field. The Python loop and the compiled
+    kernel must both reject it with the same ValueError (the C shift by
+    16 - n would otherwise be undefined behaviour)."""
+    import ezmsg_sigproc_spark.operators.jpeg as _j
+    from ezmsg_sigproc_spark.operators import jpeg_native
+
+    # solid 200: the one block's DC diff is 200 - 128 = 72, size category 7
+    payload = synth_jpeg_gray(np.full((8, 8), 200, dtype=np.uint8))
+    dht = payload.index(b"\xff\xc4")
+    assert payload[dht + 4] == 0x00  # class 0 (DC), table 0
+    nv = sum(payload[dht + 5 : dht + 21])
+    vals_at = dht + 21
+    k = payload[vals_at : vals_at + nv].index(7)
+    crafted = bytearray(payload)
+    crafted[vals_at + k] = 17
+
+    def err_of(p):
+        with pytest.raises(ValueError) as e:
+            decode_jpeg_coefficients(p)
+        return str(e.value)
+
+    python_err = None
+    orig = _j._decode_segments_native
+    _j._decode_segments_native = lambda *a, **k: None
+    try:
+        python_err = err_of(bytes(crafted))
+    finally:
+        _j._decode_segments_native = orig
+    assert python_err == "magnitude field over 16 bits"
+    if jpeg_native.lib() is None:
+        pytest.skip("no C compiler available for the native kernel")
+    assert err_of(bytes(crafted)) == python_err

@@ -291,6 +291,97 @@ def test_reopen_buckets_reingests_late_rows(spark, tmp_path):
     assert g == e
 
 
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_on_call(module, names, state):
+    """Stand-in for ``module`` whose functions in ``names`` raise _Crash
+    instead of running on the ``state["at"]``-th call counted across every
+    stand-in sharing ``state``."""
+
+    class Proxy:
+        def __getattr__(self, name):
+            f = getattr(module, name)
+            if name not in names:
+                return f
+
+            def call(*a, **k):
+                state["n"] += 1
+                if state["n"] == state["at"]:
+                    raise _Crash(f"{name}{a}")
+                return f(*a, **k)
+            return call
+    return Proxy()
+
+
+def test_reopen_buckets_crash_at_each_step(spark, tmp_path):
+    """Crash injection before every filesystem mutation of reopen_buckets
+    (lineage rename, each old lineage file's delete, each bucket's move to
+    _staging, the final delete). After every crash the lineage directory
+    exists and each bucket it lists is fully on disk; re-running the call
+    then reaches the same end state as an uncrashed reopen."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from ezmsg_sigproc_spark.plans import rollup_tiers as rt
+
+    pages = generate_pages(spark, n_urls=10, samples_per_url=2000)
+    base = tmp_path / "base"
+    store = RollupStore(spark, str(base))
+    r1m = rollup_base(pages_signal(pages), 60)
+    store.write_tier("1m", r1m)
+    store.write_tier("1h", rollup_next(r1m, 60))  # a second lineage file
+    buckets = set(store.completed_buckets("1m"))
+    hours = store.completed_buckets("1h")
+    targets = sorted(buckets)[:2]
+
+    def lineage_rows(s):
+        out = {}
+        for f in s._lineage_files():
+            t = pq.read_table(os.path.join(s.lineage_dir, f)).to_pydict()
+            for tier, b, n in zip(t["tier"], t["ts_bucket"], t["n_rows"]):
+                out[(tier, b)] = n
+        return out
+
+    def disk_rows(root):
+        tier_dir = root / "tier=1m"
+        return {int(d.name.split("=")[1]): sum(
+                    pq.read_metadata(f).num_rows for f in d.glob("*.parquet"))
+                for d in tier_dir.iterdir() if d.name.startswith("ts_bucket=")}
+
+    at = 0
+    while True:
+        at += 1
+        root = tmp_path / f"crash{at}"
+        shutil.copytree(base, root)
+        s = RollupStore(spark, str(root))
+        state = {"n": 0, "at": at}
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(rt, "os", _crash_on_call(os, {"rename", "remove"}, state))
+            mp.setattr(rt, "shutil", _crash_on_call(shutil, {"rmtree"}, state))
+            try:
+                s.reopen_buckets("1m", targets)
+                crashed = False
+            except _Crash:
+                crashed = True
+        assert os.path.isdir(s.lineage_dir)
+        on_disk = disk_rows(root)
+        for (tier, b), n in lineage_rows(s).items():
+            if tier == "1m":
+                assert on_disk.get(b) == n, f"crash {at}: bucket {b} lost"
+        assert s.completed_buckets("1h") == hours
+        s.reopen_buckets("1m", targets)
+        assert s.completed_buckets("1m") == buckets - set(targets)
+        assert set(disk_rows(root)) == buckets - set(targets)
+        assert s.completed_buckets("1h") == hours
+        if not crashed:
+            break
+    # 1 lineage rename + 2 old-file deletes + 2 bucket moves + 1 rmtree
+    assert at == 7
+
 def test_salted_rollup_composes_and_feeds_recurrence_exactly(spark, pages):
     """Pins the salted_repartition composition claim (rollup_tiers.py prose):
     a hot url split across salts produces per-(url, salt, bin) partials whose

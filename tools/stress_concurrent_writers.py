@@ -12,6 +12,7 @@ Usage: python tools/stress_concurrent_writers.py [N]
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -19,8 +20,9 @@ import time
 import traceback
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tests"))
 
 
 def main() -> int:
