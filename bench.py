@@ -14,6 +14,7 @@ Sections:
  2b. multimodal decode throughput: real PNG/BMP/JPEG/WAV payloads through
     the spec decoders, MB/s (VERDICT r3 item 7);
  3. scaling-efficiency probe: the same rollup job at local[N] and local[4N]
+    (N = $BENCH_SCALING_N, default a quarter of the cores, at least 1)
     in separate JVMs (BASELINE.json north_rule's two-cluster-size criterion,
     evidenced in-sandbox via parallelism levels) — plus a SKEWED-input
     phase (one hot url ≈ 40% of rows through the salted_repartition
@@ -33,8 +34,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-SCALING_N = int(os.environ.get("BENCH_SCALING_N", "2"))
+# default: the cores this process may run on, not a fixed 32
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
+# the probe's larger level, local[4N], must fit the host: N=1 on 4 cores
+SCALING_N = int(os.environ.get("BENCH_SCALING_N", "0")) or max(1, CPUS // 4)
 PAGES_ROWS_URLS = int(os.environ.get("BENCH_PAGES_URLS", "4000"))
 PAGES_SAMPLES = int(os.environ.get("BENCH_PAGES_SAMPLES", "1000"))
 

@@ -17,6 +17,10 @@ Python; the C is the speed mirror) and calls :func:`load` once. Contract:
   change speed, never results (parity pytest-pinned per kernel);
 - ``env_flag`` names a kill-switch env var ("0" disables), used by the
   parity tests to force the Python route.
+
+:func:`java_classes` builds the JVM side's one Java class (the fork-free
+local filesystem ``session.get_spark`` installs) into the same cache,
+under the same checks, with the same never-raise contract.
 """
 
 from __future__ import annotations
@@ -39,14 +43,19 @@ def _check_private(path: str, forbidden_mode: int) -> None:
             f"(owner {st.st_uid}, mode {oct(st.st_mode & 0o7777)})")
 
 
-def so_path(name: str, src: str) -> str:
-    """Where the kernel built from ``src`` is cached; creates and checks
-    the per-user cache directory."""
+def cache_path(name: str, key: str, suffix: str = "") -> str:
+    """Where the artifact built from ``key`` (its source) is cached; creates
+    and checks the per-user cache directory."""
     d = os.path.join(tempfile.gettempdir(), f"ezsp-native-{os.getuid()}")
     os.makedirs(d, mode=0o700, exist_ok=True)
     _check_private(d, 0o077)
-    h = hashlib.sha1(src.encode()).hexdigest()[:16]
-    return os.path.join(d, f"{name}_{h}.so")
+    h = hashlib.sha1(key.encode()).hexdigest()[:16]
+    return os.path.join(d, f"{name}_{h}{suffix}")
+
+
+def so_path(name: str, src: str) -> str:
+    """Where the kernel built from ``src`` is cached."""
+    return cache_path(name, src, ".so")
 
 
 def load(name: str, src: str, env_flag: str):
@@ -72,4 +81,51 @@ def load(name: str, src: str, env_flag: str):
     except Exception as e:
         sys.stderr.write(f"{name} kernel unavailable ({e!r}); "
                          "using the Python loop\n")
+        return None
+
+
+def java_classes(name: str, src: str, classpath: str, fallback: str):
+    """Compile-or-reuse the Java source ``src`` of public class ``name``
+    against ``classpath``; returns the classes directory (a classpath
+    entry), or None when unavailable. Never raises.
+
+    Same cache and checks as :func:`load`: the directory is keyed by the
+    source and the classpath's file names, and every entry in it must be
+    private to this uid. ``javac`` is ``$JAVA_HOME/bin/javac`` when
+    JAVA_HOME is set (the JVM Spark launches), else the one on PATH;
+    ``--release 17`` keeps the classes loadable by any JVM Spark 4 runs on.
+    """
+    try:
+        key = src + "\0" + os.pathsep.join(
+            os.path.basename(p) for p in classpath.split(os.pathsep))
+        out = cache_path(name, key)
+        if not os.path.exists(out):
+            with tempfile.TemporaryDirectory(dir=os.path.dirname(out)) as td:
+                java = os.path.join(td, f"{name}.java")
+                with open(java, "w") as f:
+                    f.write(src)
+                classes = os.path.join(td, "classes")
+                home = os.environ.get("JAVA_HOME")
+                javac = os.path.join(home, "bin", "javac") if home else "javac"
+                # C1 and serial GC halve javac's CPU time for one small file
+                subprocess.run([javac, "-J-XX:TieredStopAtLevel=1",
+                                "-J-XX:+UseSerialGC", "--release", "17",
+                                "-proc:none", "-nowarn", "-cp", classpath,
+                                "-d", classes, java],
+                               check=True, capture_output=True, timeout=120)
+                for root, dirs, files in os.walk(classes):
+                    os.chmod(root, 0o700)  # whatever the umask
+                    for fn in files:
+                        os.chmod(os.path.join(root, fn), 0o600)
+                try:
+                    os.rename(classes, out)
+                except OSError:
+                    if not os.path.isdir(out):  # else a concurrent build won
+                        raise
+        for root, dirs, files in os.walk(out):
+            for p in [root, *(os.path.join(root, fn) for fn in files)]:
+                _check_private(p, 0o022)
+        return out
+    except Exception as e:
+        sys.stderr.write(f"{name} unavailable ({e!r}); {fallback}\n")
         return None

@@ -8,7 +8,8 @@ python - <<'PY'
 import zipfile, pathlib
 root = pathlib.Path('.')
 with zipfile.ZipFile('/tmp/ezmsg_sigproc_spark.zip', 'w') as z:
-    for p in root.glob('ezmsg_sigproc_spark/**/*.py'):
-        z.write(p, p.as_posix())
+    for pattern in ('ezmsg_sigproc_spark/**/*.py', 'ezmsg_sigproc_spark/jvm/*.java'):
+        for p in root.glob(pattern):
+            z.write(p, p.as_posix())
 print('wrote /tmp/ezmsg_sigproc_spark.zip')
 PY
