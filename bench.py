@@ -313,10 +313,9 @@ def main():
     )
 
     # v2: JPEG payloads now carry a DRI restart interval (standard in
-    # camera/web encoder output) — restart segments are the unit of
-    # intra-image parallelism for the lockstep batch decoder (jpeg_batch),
-    # exactly the VERDICT r4 item-6 construction. Path bump invalidates the
-    # pre-DRI /tmp cache (NOTES.md fragile seam 6).
+    # camera/web encoder output), so every decode crosses RSTn segments
+    # and DC-predictor resets. Path bump invalidates the pre-DRI /tmp
+    # cache (NOTES.md fragile seam 6).
     media_img = "/tmp/bench_media_img_v2.parquet"
     media_wav = "/tmp/bench_media_wav.parquet"
     n_imgs = int(os.environ.get("BENCH_MEDIA_IMGS", "4096"))

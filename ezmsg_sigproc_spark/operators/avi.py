@@ -91,16 +91,8 @@ def decode_avi_mjpeg_frames(payload: bytes) -> list["np.ndarray"]:
         # for the dc case)
         if len(fourcc) == 4 and fourcc[2:4] == b"dc" and fourcc[:2].isdigit():
             jpegs.append(bytes(payload[body : body + size]))
-    # all frames of one clip decode LOCKSTEP (jpeg_batch) — a video is a
-    # ready-made batch of same-shape JPEGs; a bad frame fails the clip with
-    # the scalar decoder's own exception (outcome parity by construction)
-    from .jpeg_batch import decode_jpeg_pixels_batch
-
-    frames: list[np.ndarray] = []
-    for fr in decode_jpeg_pixels_batch(jpegs):
-        if isinstance(fr, Exception):
-            raise fr
-        frames.append(fr)
+    # a bad frame fails the whole clip with the JPEG decoder's own exception
+    frames = [decode_jpeg_pixels(j) for j in jpegs]
     if n_declared is not None and n_declared != len(frames):
         raise ValueError(
             f"avih declares {n_declared} frames, movi carries {len(frames)}")

@@ -122,7 +122,6 @@ class _Huff:
         self.ac_lut: list[int] | None = None
         self.dc_np: np.ndarray | None = None
         self.ac_np: np.ndarray | None = None
-        self._batch: tuple[np.ndarray, np.ndarray] | None = None
 
     def build_combined(self):
         """Vectorized build of the 16-bit combined tables (both variants —
@@ -162,33 +161,9 @@ class _Huff:
         ac[eob] = (ln[eob] << 20) | (65 << 13) | 2048
         ac[zrl] = (ln[zrl] << 20) | (64 << 13) | 2048
         self.ac_lut = ac.tolist()
-        # numpy copies retained for the LOCKSTEP batch decoder (jpeg_batch):
-        # it re-packs both variants into one shared (adv, ka, val) layout so
-        # a single vectorized gather serves DC and AC lanes alike.
-        self.dc_np = dc.astype(np.int64)
-        self.ac_np = ac
-
-    def batch_luts(self) -> tuple[np.ndarray, np.ndarray]:
-        """Unified-packing tables for jpeg_batch's lockstep rounds — entry
-        ``(adv << 19) | (ka << 12) | (val + 2048)`` (int32, −1 = slow path),
-        where ka is 0 for DC entries and run/64=ZRL/65=EOB for AC. Built
-        lazily from the combined tables and cached on the (content-cached)
-        _Huff object, so the cost amortizes like build_combined's."""
-        if self._batch is None:
-            if self.dc_np is None:
-                self.build_combined()
-            dcb = np.where(
-                self.dc_np >= 0,
-                ((self.dc_np >> 13) << 19) | (self.dc_np & 8191),
-                -1).astype(np.int32)
-            acb = np.where(
-                self.ac_np >= 0,
-                ((self.ac_np >> 20) << 19)
-                | (((self.ac_np >> 13) & 127) << 12)
-                | (self.ac_np & 8191),
-                -1).astype(np.int32)
-            self._batch = (dcb, acb)
-        return self._batch
+        # int32 copies of both tables for the compiled kernel (_native_pack)
+        self.dc_np = dc.astype(np.int32)
+        self.ac_np = ac.astype(np.int32)
 
     def decode(self, br: "_BitReader") -> int:
         p = br.pos
@@ -236,8 +211,7 @@ class _BitReader:
     vectorized shifts + a tolist over every BIT position) while the decode
     loop only ever visits ~10% of bit positions — one peek per SYMBOL, not
     per bit. w24 is a plain Python list (list indexing runs ~3× faster
-    than numpy scalar reads in the hot loop). The same byte-window layout
-    backs the lockstep batch decoder's shared W array (jpeg_batch)."""
+    than numpy scalar reads in the hot loop)."""
 
     def __init__(self, data: bytes):
         self.nbits = len(data) * 8
@@ -303,9 +277,7 @@ def _split_entropy(data: bytes, i: int) -> tuple[list[bytes], int]:
 def _parse_headers(payload: bytes):
     """Marker-segment parse of a baseline JPEG up to (and including) SOS.
     Returns (frame, huff_dc, huff_ac, restart_interval, scan, i) where i is
-    the byte offset of the entropy-coded data; frame carries qtables.
-    Shared by the scalar decoder and the lockstep batch decoder
-    (jpeg_batch) so acceptance behavior is identical by construction."""
+    the byte offset of the entropy-coded data; frame carries qtables."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
     n = len(payload)
@@ -395,8 +367,8 @@ def _native_pack(tables: list[_Huff]) -> tuple:
     if entry is None:
         if len(_NATIVE_PACKS) >= 64:
             _NATIVE_PACKS.clear()
-        dc = np.concatenate([t.dc_np.astype(np.int32) for t in tables])
-        ac = np.concatenate([t.ac_np.astype(np.int32) for t in tables])
+        dc = np.concatenate([t.dc_np for t in tables])
+        ac = np.concatenate([t.ac_np for t in tables])
         l256 = np.concatenate([t.lut.astype(np.int32) for t in tables])
         mn = np.concatenate(
             [np.array(t.mincode, dtype=np.int32) for t in tables])
@@ -641,18 +613,20 @@ def decode_jpeg_coefficients(payload: bytes):
     return frame, coefs
 
 
-def _pixels_from_px_blocks(frame: dict, px_by_comp: list[np.ndarray]) -> np.ndarray:
-    """Plane assembly + chroma upsample + T.871 color transform, given each
-    component's IDCT output blocks (float64 (by, bx, 8, 8), pre level-shift).
-    Shared by the scalar and lockstep-batch pixel decoders so the lossy half
-    is one code path."""
+def decode_jpeg_pixels(payload: bytes) -> np.ndarray:
+    """Decode a baseline sequential JPEG to uint8 pixels: (H, W) for one
+    component, (H, W, 3) RGB for three (YCbCr per T.871)."""
+    frame, coefs = decode_jpeg_coefficients(payload)
     w, h = frame["width"], frame["height"]
     hmax, vmax = frame["hmax"], frame["vmax"]
     planes = []
     for idx, c in enumerate(frame["components"]):
-        px = px_by_comp[idx]
-        by, bx = px.shape[:2]
-        plane = px.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8) + 128.0
+        q = frame["qtables"][c["tq"]]
+        blocks = coefs[idx]
+        by, bx = blocks.shape[:2]
+        px = idct2_blocks((blocks.reshape(-1, 8, 8) * q[None, :, :]).astype(np.float64))
+        plane = (px.reshape(by, bx, 8, 8).transpose(0, 2, 1, 3)
+                 .reshape(by * 8, bx * 8) + 128.0)
         # crop to the component's true size, then replicate up to (H, W)
         ch = -(-h * c["v"] // vmax)
         cw = -(-w * c["h"] // hmax)
@@ -670,20 +644,6 @@ def _pixels_from_px_blocks(frame: dict, px_by_comp: list[np.ndarray]) -> np.ndar
     b = y + 1.772 * (cb - 128.0)
     rgb = np.stack([r, g, b], axis=2)
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-def decode_jpeg_pixels(payload: bytes) -> np.ndarray:
-    """Decode a baseline sequential JPEG to uint8 pixels: (H, W) for one
-    component, (H, W, 3) RGB for three (YCbCr per T.871)."""
-    frame, coefs = decode_jpeg_coefficients(payload)
-    px_by_comp = []
-    for idx, c in enumerate(frame["components"]):
-        q = frame["qtables"][c["tq"]]
-        blocks = coefs[idx]
-        by, bx = blocks.shape[:2]
-        px = idct2_blocks((blocks.reshape(-1, 8, 8) * q[None, :, :]).astype(np.float64))
-        px_by_comp.append(px.reshape(by, bx, 8, 8))
-    return _pixels_from_px_blocks(frame, px_by_comp)
 
 
 # ---------------------------------------------------------------- encoder ----
@@ -865,8 +825,7 @@ def synth_jpeg(img: np.ndarray, quant_luma: np.ndarray | None = None,
     chroma downsampling — 2×1 for 4:2:2, 2×2 for 4:2:0). 4:2:2 exercises
     the decoder's ASYMMETRIC sampling-factor path (h=2, v=1).
     ``restart_interval`` (MCUs) emits DRI + RSTn markers with DC-predictor
-    resets per §F.2.1.3.1 — standard in camera/web encoder output, and the
-    unit of intra-image parallelism for the lockstep batch decoder."""
+    resets per §F.2.1.3.1 — standard in camera/web encoder output."""
     img = np.asarray(img, dtype=np.uint8).astype(np.float64)
     h, w = img.shape[:2]
     r, g, b = img[:, :, 0], img[:, :, 1], img[:, :, 2]

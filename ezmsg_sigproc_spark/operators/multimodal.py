@@ -386,21 +386,17 @@ def decode_image_features(
     binary_col: str = "payload",
     keep_cols: tuple[str, ...] = ("doc_id",),
     thumb: tuple[int, int] = (8, 8),
-    jpeg_batch_decode: bool = True,
 ) -> DataFrame:
     """REAL pixel decode → per-channel means + an area-resampled RGB
-    thumbnail (raw bytes, h*w*3), for PNG and BMP payloads; other/broken
-    payloads yield nulls. mapInPandas batching, per-payload kernel work
-    (inherent for opaque binaries)."""
+    thumbnail (raw bytes, h*w*3), for PNG, BMP, JPEG and GIF payloads;
+    other/broken payloads yield nulls. mapInPandas batching, per-payload
+    kernel work (inherent for opaque binaries)."""
     keep_schema_fields = [f for f in df.schema.fields if f.name in keep_cols]
     keep_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in keep_schema_fields)
     schema = (keep_schema + ", " if keep_schema else "") + IMAGE_FEATURES_SCHEMA
     th, tw = thumb
 
     from .gif import decode_gif_pixels as _gif
-    from .jpeg_batch import decode_jpeg_pixels_batch
-
-    _NULL_ROW_CORRUPT = ("corrupt", None, None, None, None, None, None, None)
 
     def _features(fmt: str, img: np.ndarray) -> tuple:
         if img.ndim == 2:
@@ -429,33 +425,12 @@ def decode_image_features(
             else:
                 return ("unknown", None, None, None, None, None, None, None)
         except Exception:
-            return _NULL_ROW_CORRUPT
+            return ("corrupt", None, None, None, None, None, None, None)
         return _features(fmt, img)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = [bytes(b) for b in pdf[binary_col]]
-            # JPEGs decode together through the LOCKSTEP batch decoder
-            # (jpeg_batch): one vectorized entropy decode + one batched
-            # IDCT for every JPEG in the Arrow batch. Outcome parity with
-            # the scalar path is pytest-pinned (corrupt payloads come back
-            # as per-payload exceptions → same "corrupt" row).
-            # jpeg_batch_decode=False forces the scalar per-payload decoder
-            # (A/B instrumentation for tools/bench_media.py --compare;
-            # outcome parity between the paths is pytest-pinned)
-            jpeg_px: dict[int, object] = {}
-            jidx = [i for i, b in enumerate(payloads) if b[:2] == b"\xff\xd8"]
-            if jpeg_batch_decode and len(jidx) >= 2:
-                decoded = decode_jpeg_pixels_batch([payloads[i] for i in jidx])
-                jpeg_px = dict(zip(jidx, decoded))
-            rows = []
-            for i, b in enumerate(payloads):
-                if i in jpeg_px:
-                    r = jpeg_px[i]
-                    rows.append(_NULL_ROW_CORRUPT if isinstance(r, Exception)
-                                else _features("jpeg", r))
-                else:
-                    rows.append(one(b))
+            rows = [one(bytes(b)) for b in pdf[binary_col]]
             out = pd.DataFrame(rows, columns=[
                 "format", "width", "height", "channels",
                 "mean_r", "mean_g", "mean_b", "thumb"])

@@ -55,6 +55,7 @@ snapshots stays the fallback when bucket counts reach ingest scale.
 from __future__ import annotations
 
 import hashlib
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -281,6 +282,30 @@ def _band_rows_from_sigs(sigs: DataFrame, n_hashes: int, bands: int,
     ).select("id", "band.band_id", "band.band_sig", "sig", *extra_cols)
 
 
+def prior_claim_batches(state_dir: str, batch_id: int) -> list[int]:
+    """The ``batch_id=<n>`` partitions of a foreachBatch claims table that
+    a micro-batch may join against: every ``n`` strictly below
+    ``batch_id`` (a replayed batch must not join against its own previous
+    attempt's appends) whose directory holds at least one ``.parquet``
+    file (an EMPTY micro-batch writes only ``_SUCCESS``, and a read over
+    only file-less partitions cannot infer a schema). Sorted ascending;
+    empty when ``state_dir`` does not exist yet.
+
+    ``state_dir`` must be on a local filesystem: it is listed with
+    ``os.listdir``, not through Hadoop."""
+    if not os.path.isdir(state_dir):
+        return []
+    out = []
+    for d in os.listdir(state_dir):
+        if not d.startswith("batch_id="):
+            continue
+        n = int(d.split("=", 1)[1])
+        if n < batch_id and any(f.endswith(".parquet") for f in
+                                os.listdir(os.path.join(state_dir, d))):
+            out.append(n)
+    return sorted(out)
+
+
 def streaming_minhash_join(
     stream: DataFrame,
     candidates_sink: str,
@@ -327,8 +352,6 @@ def streaming_minhash_join(
     bucket and the per-batch join shuffles only band keys and 8-long
     signatures, never the text.
     """
-    import os
-
     from ..operators.dedup import minhash_signatures
 
     docs = stream.select(F.col(id_col).cast("string").alias("id"),
@@ -339,21 +362,8 @@ def streaming_minhash_join(
         sigs = minhash_signatures(bdf, "id", "text", k=k, n_hashes=n_hashes)
         b = _band_rows_from_sigs(sigs, n_hashes, bands).persist()
         try:
-            # prior claims = every batch partition STRICTLY older than this
-            # one: a replayed batch must not join against its own previous
-            # attempt's appends (same recovery discipline as report-join).
-            # Partitions with no parquet files (an EMPTY early micro-batch
-            # writes only _SUCCESS) don't count: reading a state dir whose
-            # only partitions are file-less cannot infer a schema.
-            prior = [
-                d for d in (os.listdir(state_dir)
-                            if os.path.isdir(state_dir) else [])
-                if d.startswith("batch_id=")
-                and int(d.split("=", 1)[1]) < batch_id
-                and any(f.endswith(".parquet")
-                        for f in os.listdir(os.path.join(state_dir, d)))]
             seen = None
-            if prior:
+            if prior_claim_batches(state_dir, batch_id):
                 seen = (sess.read.parquet(state_dir)
                         .filter(F.col("batch_id") < batch_id)
                         .select("band_id", "band_sig", "first_id",

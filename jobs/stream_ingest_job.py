@@ -80,7 +80,10 @@ def run(spark, source: str, out: str, ttl_hours: float | None = None,
     """
     from pyspark.sql import functions as F
 
-    from ezmsg_sigproc_spark.streaming.dedup_stream import streaming_exact_dedup
+    from ezmsg_sigproc_spark.streaming.dedup_stream import (
+        prior_claim_batches,
+        streaming_exact_dedup,
+    )
     from ezmsg_sigproc_spark.streaming.stream_rollup import (
         streaming_rollup_to_gorilla,
     )
@@ -126,22 +129,9 @@ def run(spark, source: str, out: str, ttl_hours: float | None = None,
             sess = bdf.sparkSession
             b = bdf.persist()
             try:
-                # prior first-seen state = every batch partition STRICTLY
-                # older than this one (a replayed batch must not join
-                # against its own previous attempt's appends); partitions
-                # with no parquet files (an empty early micro-batch) don't
-                # count — a read over only file-less partitions cannot
-                # infer a schema
-                prior = [
-                    d for d in (os.listdir(first_seen_dir)
-                                if os.path.isdir(first_seen_dir) else [])
-                    if d.startswith("batch_id=")
-                    and int(d.split("=", 1)[1]) < batch_id
-                    and any(f.endswith(".parquet") for f in
-                            os.listdir(os.path.join(first_seen_dir, d)))]
                 mins = b.groupBy("content_h").agg(
                     F.min("doc_id").alias("batch_first"))
-                if prior:
+                if prior_claim_batches(first_seen_dir, batch_id):
                     t = sess.read.parquet(first_seen_dir).filter(
                         F.col("batch_id") < batch_id).select(
                         "content_h", "first_id")

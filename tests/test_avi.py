@@ -15,6 +15,7 @@ from ezmsg_sigproc_spark.operators.avi import (
     decode_avi_mjpeg_frames,
     synth_avi_mjpeg,
 )
+from ezmsg_sigproc_spark.operators.jpeg import decode_jpeg_pixels
 from ezmsg_sigproc_spark.operators.multimodal import frame_sample
 
 
@@ -84,6 +85,27 @@ def test_rejections():
     struct.pack_into("<I", bad, i + 8 + 16, 5)  # claim 5 frames
     with pytest.raises(ValueError, match="declares 5 frames"):
         decode_avi_mjpeg_frames(bytes(bad))
+    # a frame cut short (EOI halfway through its entropy data) fails the
+    # whole clip with the JPEG decoder's own exception for that frame
+    rng = np.random.default_rng(8)
+    avi = bytearray(synth_avi_mjpeg(
+        [rng.integers(0, 255, (32, 48, 3), np.uint8) for _ in range(3)]))
+    at = avi.index(b"00dc")
+    (size,) = struct.unpack("<I", avi[at + 4 : at + 8])
+    at += 8 + size + (size & 1)  # second frame's chunk
+    assert avi[at : at + 4] == b"00dc"
+    (size,) = struct.unpack("<I", avi[at + 4 : at + 8])
+    frame = avi[at + 8 : at + 8 + size]
+    cut = (frame.index(b"\xff\xda") + size) // 2
+    if frame[cut - 1] == 0xFF:  # keep a stuffed 0xFF00 pair intact
+        cut += 1
+    frame[cut : cut + 2] = b"\xff\xd9"
+    avi[at + 8 : at + 8 + size] = frame
+    with pytest.raises(Exception) as want:
+        decode_jpeg_pixels(bytes(frame))
+    with pytest.raises(want.type) as got:
+        decode_avi_mjpeg_frames(bytes(avi))
+    assert got.type is want.type and str(got.value) == str(want.value)
 
 
 def test_video_real_query_matches_duckdb(spark):

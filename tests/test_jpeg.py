@@ -188,17 +188,32 @@ def test_header_walker_reads_synth_jpeg():
 def test_image_features_decodes_jpeg_spark(spark):
     from ezmsg_sigproc_spark.operators.multimodal import (
         decode_image_features,
+        resize_area,
         synth_png,
     )
 
     rng = np.random.default_rng(45)
     img = rng.integers(60, 196, (12, 8, 3), dtype=np.uint8)
+    jpegs = {
+        3: synth_jpeg(rng.integers(0, 255, (21, 30, 3), dtype=np.uint8),
+                      subsample="420", restart_interval=2),
+        5: synth_jpeg_gray(rng.integers(0, 255, (17, 9), dtype=np.uint8)),
+    }
     rows = [
         (1, bytearray(synth_jpeg(img, quant_luma=np.ones(64),
                                  quant_chroma=np.ones(64)))),
         (2, bytearray(synth_png(img))),
+        (3, bytearray(jpegs[3])),
+        (4, bytearray(b"\xff\xd8not a jpeg")),
+        (5, bytearray(jpegs[5])),
     ]
-    df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
+    # every row in ONE partition (of as many as the session's parallelism,
+    # so the decode stage does not re-spread them): one Arrow batch holds
+    # the good JPEGs and the corrupt one together
+    n = spark.sparkContext.defaultParallelism
+    rdd = spark.sparkContext.parallelize(range(n), n).flatMap(
+        lambda i: rows if i == 0 else [])
+    df = spark.createDataFrame(rdd, "doc_id bigint, payload binary")
     out = {r.doc_id: r for r in decode_image_features(df).collect()}
     assert out[1].format == "jpeg" and (out[1].width, out[1].height) == (8, 12)
     # same pixels through JPEG (q=1, near-lossless) and PNG (lossless):
@@ -206,6 +221,18 @@ def test_image_features_decodes_jpeg_spark(spark):
     for a, b in zip((out[1].mean_r, out[1].mean_g, out[1].mean_b),
                     (out[2].mean_r, out[2].mean_g, out[2].mean_b)):
         assert abs(a - b) <= 1.0
+    # the corrupt payload gets the "corrupt" row and leaves its neighbours'
+    # features exactly those of the per-payload decoder
+    assert out[4].format == "corrupt" and out[4].width is None
+    for i, p in jpegs.items():
+        px = decode_jpeg_pixels(p)
+        rgb = px[:, :, :3] if px.ndim == 3 else np.repeat(px[:, :, None], 3, axis=2)
+        means = rgb.reshape(-1, 3).mean(axis=0)
+        assert out[i].format == "jpeg"
+        assert (out[i].width, out[i].height) == (px.shape[1], px.shape[0])
+        assert out[i].channels == (px.shape[2] if px.ndim == 3 else 1)
+        assert (out[i].mean_r, out[i].mean_g, out[i].mean_b) == tuple(means)
+        assert bytes(out[i].thumb) == resize_area(rgb, 8, 8).tobytes()
 
 
 def test_huffman_long_code_fallback_path():

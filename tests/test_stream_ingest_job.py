@@ -129,6 +129,28 @@ def test_stream_ingest_report_join_parity_and_resume(spark, tmp_path):
         pd.Timestamp(t0 + 10, unit="s")))
 
 
+def test_stream_ingest_report_join_empty_first_batch(spark, tmp_path):
+    """A zero-row source file makes report-join's FIRST micro-batch empty,
+    so its first-seen partition holds no claims (at most a zero-row file);
+    later batches must still assemble the prior claims around it and dedup
+    across it."""
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "lake")
+    os.makedirs(src)
+    t0 = 1_600_000_000
+    _pages(spark, src, "b0", [])  # zero-row file -> empty batch 0
+    _pages(spark, src, "b1", [("a.com/x", t0 + 10, "<html>A</html>")])
+    _pages(spark, src, "b2", [("c.net/z", t0 + 30, "<html>A</html>")])
+    m = run(spark, src, out, dedup_mode="report-join",
+            max_files_per_trigger=1)
+    assert m["dedup"]["docs"] == 2
+    assert m["dedup"]["dups"] == 1
+    rep = spark.read.parquet(os.path.join(out, "dedup")).toPandas()
+    dup = rep[rep["is_dup"]]
+    assert list(dup["id"]) == ["c.net/z#" + str(pd.Timestamp(t0 + 30, unit="s"))]
+    assert list(dup["dup_of"]) == ["a.com/x#" + str(pd.Timestamp(t0 + 10, unit="s"))]
+
+
 def test_stream_ingest_report_ttl_out_of_order_files(spark, tmp_path):
     """TTL report mode with OUT-OF-ORDER warc_ts across source files: with
     the lateness allowance plumbed through (--dedup-watermark; ADVICE r6 —

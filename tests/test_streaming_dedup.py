@@ -12,6 +12,7 @@ from ezmsg_sigproc_spark.operators.dedup import minhash_signatures
 from ezmsg_sigproc_spark.streaming.dedup_stream import (
     _band_pack,
     _minhash_rows,
+    prior_claim_batches,
     reduce_candidates,
     streaming_exact_dedup,
     streaming_minhash_dedup,
@@ -294,6 +295,23 @@ def test_streaming_minhash_join_empty_first_batch(spark, tmp_path):
     cands = spark.read.parquet(str(tmp_path / "cands")).toPandas()
     assert set(cands["id"]) == {"d2"}
     assert set(cands["first_id"]) == {"d1"}
+
+
+def test_prior_claim_batches_skips_fileless_and_current(tmp_path):
+    """The claims lister both foreachBatch dedup modes share: only strictly
+    older partitions holding a parquet file count, in batch order."""
+    state = tmp_path / "state"
+    assert prior_claim_batches(str(state), 5) == []  # no table yet
+    for n, files in ((0, ["part-0.parquet", "_SUCCESS"]), (1, ["_SUCCESS"]),
+                     (2, ["part-0.parquet"])):
+        d = state / f"batch_id={n}"
+        os.makedirs(d)
+        for f in files:
+            (d / f).write_bytes(b"")
+    (state / "_spark_metadata").mkdir()
+    assert prior_claim_batches(str(state), 2) == [0]
+    assert prior_claim_batches(str(state), 3) == [0, 2]
+    assert prior_claim_batches(str(state), 0) == []
 
 
 def test_minhash_rows_property_parity_with_batch(spark):

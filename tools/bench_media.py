@@ -3,7 +3,9 @@ bench.py section 2b (real PNG/BMP/JPEG-420-DRI/GIF + WAV payloads through the
 spec decoders via mapInPandas), runnable on its own for decoder iteration
 without the full 35-minute bench. Prints one JSON line.
 
-Usage: python tools/bench_media.py [--imgs 4096] [--wavs 2048] [--cores 32]
+Usage: python tools/bench_media.py [--imgs 4096] [--wavs 2048] [--cores N]
+
+--cores defaults to the number of CPUs this process may run on.
 """
 
 from __future__ import annotations
@@ -14,23 +16,16 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--imgs", type=int, default=4096)
     ap.add_argument("--wavs", type=int, default=2048)
-    ap.add_argument("--cores", type=int, default=32)
+    ap.add_argument("--cores", type=int,
+                    default=len(os.sched_getaffinity(0)))
     ap.add_argument("--repeats", type=int, default=3)
-    ap.add_argument("--compare", action="store_true",
-                    help="SAME-HOST scalar-vs-batch JPEG A/B (VERDICT r5 "
-                         "item 5): time the image mix twice in one "
-                         "invocation — jpeg_batch_decode=False (scalar "
-                         "per-payload path) then True (lockstep batch "
-                         "decoder) — and report both MB/s + the ratio, so "
-                         "the comparison cannot straddle a host-weather "
-                         "change.")
     ap.add_argument("--img-path", default="/tmp/bench_media_img_v2.parquet",
                     help="payload cache path; point at a fresh path together "
                          "with a larger --imgs to size the job above the "
@@ -113,12 +108,11 @@ def main():
             _gen_wavs, schema="doc_id bigint, payload binary"
         ).write.mode("overwrite").parquet(media_wav)
 
-    def _time_decode(df_m, mb, op, repeats, **op_kwargs):
+    def _time_decode(df_m, mb, op, repeats):
         runs, counts = [], None
         for _ in range(repeats):
             t0 = time.monotonic()
-            res = op(df_m, binary_col="payload", keep_cols=("doc_id",),
-                     **op_kwargs)
+            res = op(df_m, binary_col="payload", keep_cols=("doc_id",))
             counts = {r["format"]: r["cnt"] for r in res.groupBy("format").agg(
                 F.count("*").alias("cnt")).collect()}
             runs.append(round(time.monotonic() - t0, 3))
@@ -136,14 +130,6 @@ def main():
         mb = stats.b / 1e6
         out[name] = {"n_payloads": stats.n, "payload_mb": round(mb, 1),
                      **_time_decode(df_m, mb, op, args.repeats)}
-        if name == "image" and args.compare:
-            # scalar path timed back-to-back in the SAME invocation/host
-            scalar = _time_decode(df_m, mb, op, args.repeats,
-                                  jpeg_batch_decode=False)
-            out["image_scalar_jpeg"] = scalar
-            out["image_batch_over_scalar"] = round(
-                out["image"]["mb_per_sec_best"]
-                / scalar["mb_per_sec_best"], 2)
         if name == "image" and args.per_format:
             magic = {"png": b"\x89PN", "bmp": b"BM", "jpeg": b"\xff\xd8",
                      "gif": b"GIF"}

@@ -6,9 +6,11 @@ Usage: python tools/explain_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def plan_of(df) -> str:
@@ -229,7 +231,7 @@ def main():
         lines.append(f"| `streaming ingest` | {label} | {status} |")
         print(f"{status}  streaming: {label}")
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     spark.stop()
     sys.exit(0 if ok else 1)

@@ -17,10 +17,11 @@ from __future__ import annotations
 
 import json
 import multiprocessing as mp
+import os
 import statistics
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _worker(q, barrier):

@@ -17,13 +17,14 @@ Prints one JSON line: {"k": k, "enc_mpts_per_core": ..., "dec_mpts_per_core": ..
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 from multiprocessing import Pool
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _work(arg):
