@@ -111,106 +111,15 @@ def _bucket_col(bin_seconds: int):
     return F.floor(F.col("bin_m") * bin_seconds / per).cast("bigint").alias("ts_bucket")
 
 
-def _bucket_writer(staging: str):
-    """mapInArrow task body: write this task's rows into one parquet file per
-    ts_bucket under ``staging`` and emit (ts_bucket, n_rows) stats.
-
-    The data is hash-partitioned on ts_bucket AND sorted within partitions
-    by ts_bucket before this runs, so a bucket is wholly owned by exactly
-    one task and arrives as one contiguous run — one file per bucket, named
-    deterministically ``part-<partitionId>.parquet``, with at most ONE open
-    ParquetWriter per task (the sort is what Spark's own dynamic-partition
-    writer does for the same reason; without it a task holding thousands of
-    buckets would hold thousands of writer buffers). Retried or speculative
-    attempts write identical content (the repartition hash and sort keys
-    are deterministic) to a uuid-suffixed temp and atomically rename onto
-    the same final name, so duplicate attempts are idempotent — the same
-    immutable-content argument the store's bucket-level commit already
-    relies on. Each Arrow batch is split into bucket runs by zero-copy
-    slicing (O(rows), no per-bucket filter scans).
-    """
-
-    def write_partition(batches):
-        import os
-        import uuid as _uuid
-
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        # this closure is pickled by value and references nothing else of
-        # the engine: import the package so the worker gets its zip guard.
-        # The writer itself needs nothing of it, so a worker that cannot
-        # import the package still writes, only without the guard.
-        try:
-            import ezmsg_sigproc_spark  # noqa: F401
-        except ImportError:
-            pass
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        counts: dict[int, int] = {}
-        closed: set[int] = set()
-        cur_b: int | None = None
-        cur: tuple | None = None  # (writer, tmp_path, final_path)
-
-        def close_cur():
-            nonlocal cur
-            if cur is not None:
-                cur[0].close()
-                os.rename(cur[1], cur[2])
-                cur = None
-
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            b = tbl.column("ts_bucket").to_numpy()
-            body = tbl.drop_columns(["ts_bucket"])
-            starts = np.concatenate(
-                [[0], np.flatnonzero(np.diff(b)) + 1, [len(b)]])
-            for i in range(len(starts) - 1):
-                lo, hi = int(starts[i]), int(starts[i + 1])
-                bk = int(b[lo])
-                sub = body.slice(lo, hi - lo)
-                if bk != cur_b:
-                    close_cur()  # sorted input: a new bucket ends the old
-                    if cur_b is not None:
-                        closed.add(cur_b)
-                    if bk in closed:
-                        # one-writer-at-a-time is only sound on contiguous
-                        # runs; a reappearing bucket would atomically
-                        # REPLACE its finished file with a partial one —
-                        # fail loudly instead (the write_tier call site
-                        # always sorts within partitions by ts_bucket)
-                        raise ValueError(
-                            f"ts_bucket {bk} not contiguous in task {pid}: "
-                            "input to _bucket_writer must be sorted by "
-                            "ts_bucket within partitions")
-                    bdir = os.path.join(staging, f"ts_bucket={bk}")
-                    os.makedirs(bdir, exist_ok=True)
-                    tmp = os.path.join(
-                        bdir, f".part-{pid:05d}-{_uuid.uuid4().hex[:8]}.tmp")
-                    cur = (pq.ParquetWriter(tmp, sub.schema,
-                                            compression="snappy"),
-                           tmp, os.path.join(bdir, f"part-{pid:05d}.parquet"))
-                    cur_b = bk
-                cur[0].write_table(sub)
-                counts[bk] = counts.get(bk, 0) + sub.num_rows
-        close_cur()
-        if counts:
-            ks = sorted(counts)
-            yield pa.RecordBatch.from_pydict(
-                {"ts_bucket": pa.array(ks, pa.int64()),
-                 "n_rows": pa.array([counts[k] for k in ks], pa.int64())})
-
-    return write_partition
-
-
 class RollupStore:
     """Hive-partitioned parquet lakehouse with lineage + retention.
 
     Layout: ``root/tier=<t>/ts_bucket=<b>/*.parquet`` and
     ``root/_lineage/*.parquet`` (tier, ts_bucket, n_rows, written_at).
+    ``root/_staging/tier=<t>-<uuid>/`` holds one write_tier call's Spark
+    write until its bucket dirs are renamed into the tier; a bucket's
+    lineage ``n_rows`` is the sum of the row counts in its staged files'
+    parquet footers. Readers never look under ``_staging``.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -336,83 +245,90 @@ class RollupStore:
         # on (ts_bucket, salt) before calling write_tier.
         par = max(int(self.spark.conf.get("spark.sql.shuffle.partitions", "32")),
                   self.spark.sparkContext.defaultParallelism)
-        shutil.rmtree(staging, ignore_errors=True)
-        os.makedirs(staging, exist_ok=True)
         timings: dict[str, float] = {}
-        # The staged write is an executor-side pyarrow writer (mapInArrow)
-        # rather than Spark's dynamic-partition ``partitionBy`` insert: the
-        # dynamic writer sorts every task's rows by partition value, opens
-        # its ~bucket-count files through the Hadoop committer's _temporary
-        # double-rename, and leaves row counts to a separate footer pass.
-        # Writing the (already bucket-partitioned) rows directly gives one
-        # deterministic file per bucket, returns per-bucket row counts from
-        # the same job, and needs no second commit protocol underneath our
-        # own staged-atomic-rename one. Measured sf0.1 720-bucket 1m tier:
-        # write 2.4-2.9 s → 1.5 s AND the 0.4-0.5 s footer pass drops to the
-        # cost of collecting ~720 stat rows. Crash-consistency is unchanged:
-        # stats come from the writing job itself, which only returns after
-        # every staged file is closed and renamed; lineage still commits
-        # strictly after the bucket-dir renames below.
-        t0 = time.monotonic()
-        stat_rows = (
-            out.repartition(par, F.col("ts_bucket"))
-            .sortWithinPartitions("ts_bucket")
-            .mapInArrow(_bucket_writer(staging), "ts_bucket bigint, n_rows bigint")
-            .collect())
-        timings["write"] = round(time.monotonic() - t0, 3)
-        t0 = time.monotonic()
-        stats_map: dict[int, int] = {}
-        for r in stat_rows:
-            stats_map[r.ts_bucket] = stats_map.get(r.ts_bucket, 0) + r.n_rows
-        timings["footer_stats"] = round(time.monotonic() - t0, 3)
-        stats = sorted(stats_map.items())
-        t0 = time.monotonic()
-        if stats:
-            os.makedirs(tier_dir, exist_ok=True)
-            # Commit NEVER deletes an existing bucket directory (ADVICE r4).
-            # Under this staged-atomic-rename protocol a ``ts_bucket=`` dir
-            # under the tier path can only come into existence via one
-            # atomic rename of a fully-staged directory — Spark writes land
-            # under ``_staging``, never here — so any existing dst is a
-            # COMPLETE bucket whose content is identical to ours under the
-            # immutable-input-per-bucket contract. The old rmtree path
-            # ("replace stale partial") could therefore only ever destroy a
-            # concurrent writer's committed bucket, opening a window where a
-            # lineage-listed bucket was absent on disk and a concurrent
-            # read silently lost its rows. Skip instead; the winner stands.
-            # (Genuine reprocessing of changed input goes through
-            # ``reopen_buckets``, which un-commits a bucket, then drops it.)
+        # Spark's own dynamic-partition writer stages the buckets, and the
+        # lineage row counts come from the staged files' parquet footers
+        # (28-46 ms on the driver for the 337 buckets of perfbench's ``host``
+        # 1m tier), not from a second Spark job.
+        # It replaced an executor-side pyarrow writer run as one Python stage
+        # per tier, which renamed files on the shared filesystem from inside
+        # tasks. The store now has one parquet writer and no Python stage,
+        # at a measured CPU price: on a 4-vCPU host (local[4], C1 + serial
+        # GC, the 1m tier cached), writing those 337 files cost a median
+        # 3.2 CPU-s against 2.1 CPU-s for the pyarrow writer. A JFR profile
+        # puts ~3/4 of the executor samples in the per-file writer set-up
+        # and close: ParquetOutputFormat.getRecordWriter, whose
+        # ColumnConfigParser walks the whole ~1,080-key Hadoop conf, and the
+        # per-file codec streams. Fewer, larger files or a smaller conf
+        # would cut it. Crash-consistency is unchanged: the counts are read
+        # only after the write job has committed every staged file, and
+        # lineage still commits strictly after the bucket-dir renames below.
+        try:
+            t0 = time.monotonic()
+            (out.repartition(par, F.col("ts_bucket"))
+             .write.partitionBy("ts_bucket").parquet(staging))
+            timings["write"] = round(time.monotonic() - t0, 3)
+            t0 = time.monotonic()
+            stats = []
             for d in os.listdir(staging):
                 if not d.startswith("ts_bucket="):
                     continue
-                dst = os.path.join(tier_dir, d)
-                try:
-                    os.rename(os.path.join(staging, d), dst)
-                except OSError:
-                    # dst exists (a winner's complete, identical bucket) or
-                    # a racing writer is mid-rename — wait briefly for the
-                    # directory to be visible before concluding it is
-                    # genuinely missing.
-                    for _ in range(100):
-                        if os.path.isdir(dst):
-                            break
-                        time.sleep(0.05)
-                    else:
-                        raise
-            # Lineage: claim every staged bucket not already committed —
-            # this covers both our own renames and a crashed run's renamed
-            # buckets that never reached its lineage append (our staged
-            # copy's footer stats equal the winner's under the identity
-            # contract). Racing writers may both append a bucket's row;
-            # completed_buckets reads lineage as a set, so duplicates are
-            # harmless.
-            committed_now = self.completed_buckets(tier)
-            stats = [(b, n) for b, n in stats if b not in committed_now]
+                bdir = os.path.join(staging, d)
+                stats.append((int(d.split("=", 1)[1]), sum(
+                    pq.read_metadata(os.path.join(bdir, f)).num_rows
+                    for f in os.listdir(bdir) if not f.startswith((".", "_")))))
+            stats.sort()
+            timings["footer_stats"] = round(time.monotonic() - t0, 3)
+            t0 = time.monotonic()
             if stats:
-                self._append_lineage(tier, stats)
-        timings["commit"] = round(time.monotonic() - t0, 3)
+                os.makedirs(tier_dir, exist_ok=True)
+                # Commit NEVER deletes an existing bucket directory (ADVICE
+                # r4). Under this staged-atomic-rename protocol a
+                # ``ts_bucket=`` dir under the tier path can only come into
+                # existence via one atomic rename of a fully-staged
+                # directory — Spark writes land under ``_staging``, never
+                # here — so any existing dst is a COMPLETE bucket whose
+                # content is identical to ours under the
+                # immutable-input-per-bucket contract. Replacing it could
+                # only ever destroy a concurrent writer's committed bucket,
+                # opening a window where a lineage-listed bucket was absent
+                # on disk and a concurrent read silently lost its rows.
+                # Skip instead; the winner stands. (Genuine reprocessing of
+                # changed input goes through ``reopen_buckets``, which
+                # un-commits a bucket, then drops it.)
+                for b, _ in stats:
+                    d = f"ts_bucket={b}"
+                    dst = os.path.join(tier_dir, d)
+                    try:
+                        os.rename(os.path.join(staging, d), dst)
+                    except OSError:
+                        # dst exists (a winner's complete, identical bucket)
+                        # or a racing writer is mid-rename — wait briefly
+                        # for the directory to be visible before concluding
+                        # it is genuinely missing.
+                        for _ in range(100):
+                            if os.path.isdir(dst):
+                                break
+                            time.sleep(0.05)
+                        else:
+                            raise
+                # Lineage: claim every staged bucket not already committed —
+                # this covers both our own renames and a crashed run's
+                # renamed buckets that never reached its lineage append (our
+                # staged copy's footer counts equal the winner's under the
+                # identity contract). Racing writers may both append a
+                # bucket's row; completed_buckets reads lineage as a set, so
+                # duplicates are harmless.
+                committed_now = self.completed_buckets(tier)
+                stats = [(b, n) for b, n in stats if b not in committed_now]
+                if stats:
+                    self._append_lineage(tier, stats)
+            timings["commit"] = round(time.monotonic() - t0, 3)
+        finally:
+            # also on failure: a failed write must not leave its staged
+            # files behind for good
+            shutil.rmtree(staging, ignore_errors=True)
         self.last_write_phases[tier] = timings
-        shutil.rmtree(staging, ignore_errors=True)
         return {
             "tier": tier,
             "buckets_written": len(stats),

@@ -31,7 +31,9 @@ compiles the class with ``javac`` into the per-user kernel cache (~0.8 s
 wall when the cache is cold) and installs it only when it launches the
 driver JVM itself. Without javac, or when the build or the cache's
 ownership checks fail, it writes one stderr line and Spark keeps its stock
-filesystem.
+filesystem. So does a job under spark-submit, where the JVM is already
+running: there every Spark write forks ``chmod`` per file, the
+``RollupStore`` bucket write (``plans/rollup_tiers.py``) included.
 """
 
 from __future__ import annotations

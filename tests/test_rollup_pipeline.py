@@ -97,37 +97,50 @@ def test_store_resume_and_retention(spark, tmp_path):
 
 def test_bucket_writer_one_file_per_bucket_and_contiguity_guard(
         spark, pages, tmp_path):
-    """r7 direct-writer internals: exactly ONE deterministic part-<pid>
-    file per bucket dir, and the writer fails loudly on non-contiguous
-    (unsorted) bucket input instead of silently replacing a finished file
-    with a partial one."""
-    import pyarrow as pa
-
-    from ezmsg_sigproc_spark.plans.rollup_tiers import _bucket_writer
-
+    """The store's staged write leaves exactly ONE part file per bucket dir,
+    no write-committer files in the tier, an empty ``_staging``, and the
+    tier schema that readers rely on. (The contiguity guard this test also
+    covered belonged to the store's former pyarrow bucket writer; Spark's
+    dynamic-partition writer sorts each task's rows by partition itself.)"""
     store = RollupStore(spark, str(tmp_path / "lake"))
     store.write_tier("1m", rollup_base(pages_signal(pages), 60), resume=False)
     tier_dir = os.path.join(store.root, "tier=1m")
     for d in os.listdir(tier_dir):
+        assert d.startswith("ts_bucket="), d
         files = [f for f in os.listdir(os.path.join(tier_dir, d))
                  if f.endswith(".parquet")]
         assert len(files) == 1 and files[0].startswith("part-"), (d, files)
+    names = [n for _, ds, fs in os.walk(tier_dir) for n in ds + fs]
+    assert "_SUCCESS" not in names and "_temporary" not in names
+    assert os.listdir(os.path.join(store.root, "_staging")) == []
+    # ts_bucket is the hive partition column: its type is inferred from the
+    # directory names, int while the bucket numbers fit in 32 bits
+    assert [(f.name, f.dataType.simpleString())
+            for f in store.read_tier("1m").schema] == [
+        ("url", "string"), ("bin_m", "bigint"), ("n", "bigint"),
+        ("sum", "double"), ("min", "double"), ("max", "double"),
+        ("sum_sq", "double"), ("ts_bucket", "int")]
 
-    staging = str(tmp_path / "staging")
-    os.makedirs(staging, exist_ok=True)
-    bad = pa.RecordBatch.from_pydict(
-        {"ts_bucket": pa.array([1, 2, 1], pa.int64()),
-         "v": pa.array([0.0, 1.0, 2.0])})
-    import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="not contiguous"):
-        list(_bucket_writer(staging)(iter([bad])))
+def test_failed_write_leaves_no_staging(spark, pages, tmp_path):
+    """A write job that raises leaves nothing behind: no staged files, no
+    tier dir, no lineage."""
+    store = RollupStore(spark, str(tmp_path / "lake"))
+    bad = rollup_base(pages_signal(pages), 60).withColumn(
+        "sum", F.when(F.col("n") > 0, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("sum")))
+    with pytest.raises(Exception, match="boom"):
+        store.write_tier("1m", bad)
+    staging = os.path.join(store.root, "_staging")
+    assert not os.path.isdir(staging) or os.listdir(staging) == []
+    assert not os.path.exists(os.path.join(store.root, "tier=1m"))
+    assert store.completed_buckets("1m") == set()
 
 
 def test_lineage_stats_match_true_bucket_counts(spark, pages, tmp_path):
-    """write_tier derives lineage n_rows from the writing job's own
-    per-bucket stats (no re-computation, no footer pass); they must equal
-    the true per-bucket counts."""
+    """write_tier derives lineage n_rows from the staged files' parquet
+    footers (no re-computation); they must equal the true per-bucket
+    counts."""
     store = RollupStore(spark, str(tmp_path / "lake"))
     r1m = rollup_base(pages_signal(pages), 60)
     store.write_tier("1m", r1m, resume=False)
