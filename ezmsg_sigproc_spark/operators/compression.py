@@ -588,7 +588,6 @@ def gorilla_compress(
     value_col: str = "value",
     ts_scale: float = 1_000_000.0,
     verify: str = "full",
-    sample_mod: int = 16,
     emit_blobs: bool = False,
     num_partitions: int | None = None,
 ) -> DataFrame:
@@ -598,21 +597,18 @@ def gorilla_compress(
     ``ts_scale`` converts the (double, seconds) ts column to integer units
     (default µs) for delta-of-delta coding.
 
-    ``verify``: decode-back policy. ``'full'`` decodes every block (tests /
-    small data); ``'sample'`` fully decodes a deterministic 1-in-``sample_mod``
-    subset of keys (zlib.crc32 of the key tuple) and prefix-decodes 64 points
-    of the rest — every block still checks all field types, but decode cost no
-    longer scales with total points; ``'none'`` skips decoding. The decoder is
-    pure sequential Python (variable-length bit fields have a data-dependent
-    parse position), so always-on full verification would put an O(points)
-    interpreter loop in the write path — the round-1 scaling bottleneck.
-    Output column ``verified_points`` records per-block coverage honestly.
+    ``verify``: decode-back policy, ``'full'`` (decode every block and
+    compare it with its input) or ``'none'`` (skip decoding); any other
+    value is a ``ValueError``. The decode-back runs lockstep across the
+    batch's blocks in numpy (:func:`verify_blocks`), cheap enough for
+    ``'full'`` to be the default. Output column ``verified_points`` records
+    per-block coverage.
 
     Scale note: at 100 TB this runs per (key, time-bucket) so blocks stay
     bounded; see plans/rollup_tiers for the bucketed variant.
     """
-    import zlib
-
+    if verify not in ("full", "none"):
+        raise ValueError(f"verify must be 'full' or 'none', not {verify!r}")
     key_cols = list(key_cols)
     key_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields if f.name in key_cols
@@ -627,8 +623,8 @@ def gorilla_compress(
 
     def encode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         """pdf: (key, ts)-sorted rows for ≥1 complete blocks. The ENCODE of
-        every block in the batch is one vectorized pass (encode_*_blocks);
-        only the decode-back verification walks sampled blocks in Python."""
+        every block in the batch is one vectorized pass (encode_*_blocks),
+        and so is the decode-back verification (verify_blocks)."""
         change = key_change_mask(pdf[key_cols])
         starts = np.concatenate([np.flatnonzero(change), [len(pdf)]])
         ts = np.round(pdf[ts_col].to_numpy(np.float64) * ts_scale).astype(np.int64)
@@ -640,28 +636,8 @@ def gorilla_compress(
         rows = {c: pdf[c].to_numpy()[starts[:-1]] for c in key_cols}
         if verify == "full":
             vps = lengths.astype(np.int64)
-        elif verify == "none":
-            vps = np.zeros(n_blocks, dtype=np.int64)
         else:
-            # 1-in-sample_mod keys fully decoded; of the rest, only blocks
-            # LONGER than the 64-point prefix get a prefix check — for short
-            # blocks a "prefix" would be a full decode of every block, which
-            # is exactly the cost sampling exists to avoid, and the
-            # full-decode sample already covers the short-block population
-            # statistically
-            crcs = np.fromiter(
-                (
-                    zlib.crc32("|".join(str(rows[c][b]) for c in key_cols).encode())
-                    for b in range(n_blocks)
-                ),
-                dtype=np.int64,
-                count=n_blocks,
-            )
-            vps = np.where(
-                crcs % sample_mod == 0,
-                lengths,
-                np.where(lengths > 64, 64, 0),
-            ).astype(np.int64)
+            vps = np.zeros(n_blocks, dtype=np.int64)
         # batch lockstep decode-back (decode_*_blocks): verification cost is
         # numpy-vectorized across blocks, so 'full' is cheap enough to be the
         # bench default

@@ -44,6 +44,9 @@ from pyspark.sql import functions as F
 
 TIERS = {"1m": 60, "1h": 3600, "1d": 86400}
 PARTIAL_COLS = ["n", "sum", "min", "max", "sum_sq"]
+# every tier's columns as stored; ts_bucket is the hive partition column
+TIER_SCHEMA = ("url string, bin_m bigint, n bigint, sum double, min double, "
+               "max double, sum_sq double, ts_bucket bigint")
 
 
 def pages_signal(pages: DataFrame) -> DataFrame:
@@ -338,7 +341,11 @@ class RollupStore:
         }
 
     def read_tier(self, tier: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, f"tier={tier}"))
+        """The tier's rows, read with :data:`TIER_SCHEMA`: ``ts_bucket`` is
+        bigint as in the writer and lineage, whatever Spark would infer
+        from the directory names."""
+        return self.spark.read.schema(TIER_SCHEMA).parquet(
+            os.path.join(self.root, f"tier={tier}"))
 
     # -- late data --------------------------------------------------------
     def reopen_buckets(self, tier: str, buckets: list[int]) -> int:

@@ -317,3 +317,14 @@ def test_gorilla_blob_roundtrip_spark(spark):
     assert len(a) == len(b)
     np.testing.assert_allclose(a["ts"].to_numpy(), b["ts"].to_numpy(), rtol=0, atol=1e-6)
     np.testing.assert_array_equal(a["value"].to_numpy(), b["value"].to_numpy())
+
+
+def test_gorilla_compress_rejects_unknown_verify(spark):
+    """A misspelt ``verify`` policy is an error at plan time, not a silent
+    fall into another decode-back policy."""
+    from ezmsg_sigproc_spark.operators.compression import gorilla_compress
+
+    df = spark.createDataFrame([("k", 1.0, 2.0)], "key string, ts double, value double")
+    for bad in ("sample", "Full", ""):
+        with pytest.raises(ValueError, match="verify must be 'full' or 'none'"):
+            gorilla_compress(df, verify=bad)

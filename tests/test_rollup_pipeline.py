@@ -2,6 +2,7 @@
 retention expiry, pages invariants, streaming/batch agreement."""
 
 import os
+import re
 
 import numpy as np
 import pandas as pd
@@ -113,13 +114,14 @@ def test_bucket_writer_one_file_per_bucket_and_contiguity_guard(
     names = [n for _, ds, fs in os.walk(tier_dir) for n in ds + fs]
     assert "_SUCCESS" not in names and "_temporary" not in names
     assert os.listdir(os.path.join(store.root, "_staging")) == []
-    # ts_bucket is the hive partition column: its type is inferred from the
-    # directory names, int while the bucket numbers fit in 32 bits
+    # ts_bucket is the hive partition column, read as bigint like the
+    # writer's column and lineage, not as Spark's int inferred from the
+    # directory names
     assert [(f.name, f.dataType.simpleString())
             for f in store.read_tier("1m").schema] == [
         ("url", "string"), ("bin_m", "bigint"), ("n", "bigint"),
         ("sum", "double"), ("min", "double"), ("max", "double"),
-        ("sum_sq", "double"), ("ts_bucket", "int")]
+        ("sum_sq", "double"), ("ts_bucket", "bigint")]
 
 
 def test_failed_write_leaves_no_staging(spark, pages, tmp_path):
@@ -519,6 +521,30 @@ def test_read_resolution_unaligned_bounds_and_partition_pruning(spark, tmp_path)
     np.testing.assert_allclose(
         got.iloc[[0, -1]]["mean"].to_numpy(),
         (exp.iloc[[0, -1]]["sum"] / exp.iloc[[0, -1]]["n"]).to_numpy(), rtol=1e-12)
+
+
+def test_read_resolution_bucket_bound_is_a_partition_filter(spark, tmp_path):
+    """With ``ts_bucket`` read as bigint, read_resolution's bucket bounds
+    are still parquet PARTITION filters on the bare column (no cast), and
+    the scan lists only the buckets inside them."""
+    from ezmsg_sigproc_spark.plans.rollup_tiers import read_resolution
+
+    pages = generate_pages(spark, n_urls=3, samples_per_url=8000)
+    store = RollupStore(spark, str(tmp_path / "lake"))
+    store.write_tier("1m", rollup_base(pages_signal(pages), 60), resume=False)
+    buckets = sorted(store.completed_buckets("1m"))
+    assert len(buckets) >= 4
+    lo, hi = buckets[1], buckets[2]
+    out = read_resolution(store, 60, t0=lo * 3600, t1=hi * 3600 + 1)
+    scan = next(line for line in
+                out._jdf.queryExecution().executedPlan().toString()
+                .splitlines() if "FileScan" in line)
+    filters = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert re.search(rf"\(ts_bucket#\d+L >= {lo}\)", filters), filters
+    assert re.search(rf"\(ts_bucket#\d+L <= {hi}\)", filters), filters
+    assert "cast" not in filters, filters
+    got = out.select(F.floor(F.col("bin_ts") / 3600).alias("b")).distinct()
+    assert {r.b for r in got.collect()} == {lo, hi}
 
 
 def test_concurrent_writers_and_read_mid_write(spark, pages, tmp_path):

@@ -8,6 +8,7 @@ import sys
 
 import numpy as np
 import pandas as pd
+import pytest
 
 sys.path.insert(0, os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
@@ -95,10 +96,10 @@ def test_stream_ingest_drop_mode_filters_dups(spark, tmp_path):
 
 def test_stream_ingest_report_join_parity_and_resume(spark, tmp_path):
     """dedup_mode='report-join' (foreachBatch first-seen join, no Python
-    stage): verdict rows (id, is_dup, dup_of) equal the report mode's on the
-    same corpus — same-batch dup, cross-RUN dup, re-arrival of an original —
-    and a second invocation processes only new files (checkpoint resume,
-    idempotent batch_id partitions)."""
+    stage): verdict rows (id, is_dup, dup_of) are exactly the expected ones
+    on a corpus with a same-batch dup, a cross-RUN dup and a re-arrival of
+    an original, and a second invocation processes only new files
+    (checkpoint resume, idempotent batch_id partitions)."""
     t0 = 1_600_000_000
     rows1 = [("a.com/x", t0 + 10, "<html>A</html>"),
              ("a.com/x", t0 + 11, "<html>A</html>"),   # same-batch dup
@@ -106,27 +107,33 @@ def test_stream_ingest_report_join_parity_and_resume(spark, tmp_path):
     rows2 = [("c.net/z", t0 + 30, "<html>A</html>"),   # cross-run dup
              ("a.com/x", t0 + 10, "<html>A</html>"),   # re-arrival of original
              ("d.io/w", t0 + 40, "<html>D</html>")]
-    verdicts = {}
-    for mode in ("report", "report-join"):
-        src = str(tmp_path / f"src_{mode}")
-        out = str(tmp_path / f"lake_{mode}")
-        os.makedirs(src)
-        _pages(spark, src, "b1", rows1)
-        m1 = run(spark, src, out, dedup_mode=mode)
-        assert m1["dedup"]["docs"] == 3
-        _pages(spark, src, "b2", rows2)
-        m2 = run(spark, src, out, dedup_mode=mode)
-        assert m2["dedup"]["docs"] == 6
-        rep = spark.read.parquet(os.path.join(out, "dedup")).toPandas()
-        verdicts[mode] = (rep[["id", "is_dup", "dup_of"]]
-                          .sort_values(["id", "is_dup"])
-                          .reset_index(drop=True))
-    pd.testing.assert_frame_equal(verdicts["report"], verdicts["report-join"])
-    # the join mode's verdicts are what we expect semantically, too
-    v = verdicts["report-join"].set_index("id")
-    dup_row = v.loc["a.com/x#" + str(pd.Timestamp(t0 + 11, unit="s"))]
-    assert bool(dup_row["is_dup"]) and dup_row["dup_of"].endswith("#" + str(
-        pd.Timestamp(t0 + 10, unit="s")))
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "lake")
+    os.makedirs(src)
+    _pages(spark, src, "b1", rows1)
+    m1 = run(spark, src, out, dedup_mode="report-join")
+    assert m1["dedup"]["docs"] == 3
+    _pages(spark, src, "b2", rows2)
+    m2 = run(spark, src, out, dedup_mode="report-join")
+    assert m2["dedup"]["docs"] == 6
+
+    def doc(url, t):
+        return url + "#" + str(pd.Timestamp(t, unit="s"))
+
+    a10 = doc("a.com/x", t0 + 10)
+    want = pd.DataFrame([
+        (a10, False, ""),
+        (doc("a.com/x", t0 + 11), True, a10),
+        (doc("b.org/y", t0 + 20), False, ""),
+        (doc("c.net/z", t0 + 30), True, a10),
+        (a10, False, ""),  # the original's re-arrival is not its own dup
+        (doc("d.io/w", t0 + 40), False, ""),
+    ], columns=["id", "is_dup", "dup_of"])
+    rep = spark.read.parquet(os.path.join(out, "dedup")).toPandas()
+    pd.testing.assert_frame_equal(
+        rep[["id", "is_dup", "dup_of"]].sort_values(["id", "is_dup"])
+        .reset_index(drop=True),
+        want.sort_values(["id", "is_dup"]).reset_index(drop=True))
 
 
 def test_stream_ingest_report_join_empty_first_batch(spark, tmp_path):
@@ -152,11 +159,9 @@ def test_stream_ingest_report_join_empty_first_batch(spark, tmp_path):
 
 
 def test_stream_ingest_report_ttl_out_of_order_files(spark, tmp_path):
-    """TTL report mode with OUT-OF-ORDER warc_ts across source files: with
-    the lateness allowance plumbed through (--dedup-watermark; ADVICE r6 —
-    the old hardcoded '0 seconds' silently dropped late pages from the
-    report), every page gets a verdict row even when a later file carries
-    earlier event times."""
+    """TTL report with OUT-OF-ORDER warc_ts across source files: no page is
+    ever dropped as late, so every page gets a verdict row even when a
+    later file carries earlier event times."""
     src = str(tmp_path / "src")
     out = str(tmp_path / "lake")
     os.makedirs(src)
@@ -166,10 +171,19 @@ def test_stream_ingest_report_ttl_out_of_order_files(spark, tmp_path):
     _pages(spark, src, "b1", [("a.com/x", t0 + 3600, "<html>A</html>")])
     _pages(spark, src, "za", [("b.org/y", t0 + 10, "<html>B</html>"),
                               ("c.net/z", t0 + 20, "<html>A</html>")])
-    m = run(spark, src, out, ttl_hours=24.0, dedup_mode="report",
-            dedup_watermark="2 hours", max_files_per_trigger=1)
+    m = run(spark, src, out, ttl_hours=24.0, max_files_per_trigger=1)
     rep = spark.read.parquet(os.path.join(out, "dedup")).toPandas()
     assert m["dedup"]["docs"] == 3, f"late pages lost from the report: {rep}"
     ids = set(rep["id"])
     assert any(i.startswith("b.org/y") for i in ids)
     assert any(i.startswith("c.net/z") for i in ids)
+
+
+def test_stream_ingest_rejects_unknown_dedup_mode(spark, tmp_path):
+    """A misspelt dedup mode is an error, not a silent fallback to another
+    mode; nothing is started or written."""
+    for bad in ("report", "report_join"):
+        with pytest.raises(ValueError, match=f"unknown dedup_mode '{bad}'"):
+            run(spark, str(tmp_path / "src"), str(tmp_path / "lake"),
+                dedup_mode=bad)
+    assert not os.path.exists(tmp_path / "lake")

@@ -7,6 +7,7 @@ Usage: python tools/explain_audit.py [sf_dir]
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -175,61 +176,49 @@ def main():
         f"artifacts) | {status} |")
     print(f"{status}  skew_guard=False: plain plan unchanged")
 
-    # streaming ingest plans (VERDICT r6 item 7): the analyzed streaming
-    # plans must show (a) the minhash stateful exchange carries only
-    # (id, band_id, band_sig, sig) — no text — AND its band rows are built
-    # by column expressions (no Python node before the stateful stage, the
-    # r7 rewrite), (b) drop-mode dedup is a pure-JVM Deduplicate with no
-    # Python stage anywhere.
+    # streaming ingest plans: the minhash join's per-batch candidate and
+    # claims plans, with a prior claims partition to join against, and
+    # drop-mode dedup have no Python node anywhere
     import tempfile
 
     sdir = tempfile.mkdtemp(prefix="audit_stream_")
-    stream = spark.readStream.schema("doc_id string, text string").parquet(
-        sdir + "/*")
+    from ezmsg_sigproc_spark.operators.dedup import minhash_signatures
     from ezmsg_sigproc_spark.streaming.dedup_stream import (
+        ClaimsTable,
+        _band_rows_from_sigs,
         _join_candidates,
-        minhash_band_rows,
-        streaming_minhash_dedup,
     )
 
-    mh_plan = (streaming_minhash_dedup(stream)
-               ._jdf.queryExecution().analyzed().toString())
-    # join-mode (r7): band rows + the per-batch candidate/claims pipeline
-    # are DataFrame expressions end to end — no Python node anywhere
-    jb = minhash_band_rows(spark.createDataFrame(
-        [("d1", "abcdefghij")], "doc_id string, text string"))
-    jseen = jb.groupBy("band_id", "band_sig").agg(
-        F.min("id").alias("first_id"), F.first("sig").alias("first_sig"))
-    jc, jclaims = _join_candidates(jb, jseen, 8)
+    jb = _band_rows_from_sigs(minhash_signatures(spark.createDataFrame(
+        [("d1", "abcdefghij")], "doc_id string, text string"),
+        "doc_id", "text", k=5, n_hashes=8), 8, 4)
+    table = ClaimsTable(os.path.join(sdir, "claims"), ["band_id", "band_sig"],
+                        ["first_id", "first_sig"])
+    table.append(_join_candidates(jb, table, 0, 8)[1], 0)
+    jc, jclaims = _join_candidates(jb, table, 1, 8)
     join_plan = (jc._jdf.queryExecution().executedPlan().toString()
                  + jclaims._jdf.queryExecution().executedPlan().toString())
-    seg_head = mh_plan[mh_plan.index("FlatMapGroupsInPandasWithState"):]
-    seg_head = seg_head.splitlines()[0]
     pages = spark.readStream.schema(
         "url string, warc_ts timestamp, html binary").parquet(sdir + "/*")
     drop_plan = (pages.withColumn("content_h", F.sha2("html", 256))
                  .dropDuplicates(["content_h"])
                  ._jdf.queryExecution().analyzed().toString())
     for label, got in (
-        ("stateful exchange keys (band_id, band_sig), text pruned",
-         "band_id" in seg_head and "band_sig" in seg_head
-         and "text" not in seg_head),
-        ("band rows are column expressions — no Python stage before the "
-         "stateful op", "MapInPandas" not in mh_plan.replace(
-             "FlatMapGroupsInPandasWithState", "")
-         and "PythonUDF" not in mh_plan),
         ("drop-mode dedup is JVM Deduplicate, no Python stage anywhere",
          "Deduplicate" in drop_plan and "Python" not in drop_plan
          and "MapInPandas" not in drop_plan),
-        ("minhash join mode: candidates + claims plans have no Python "
-         "node (EvalPython/MapInPandas/FlatMapGroups absent)",
-         "Python" not in join_plan and "MapInPandas" not in join_plan
+        ("minhash join mode: candidates + claims plans read the prior "
+         "claims and have no Python node (EvalPython/MapInPandas/"
+         "FlatMapGroups absent)",
+         "FileScan parquet" in join_plan
+         and "Python" not in join_plan and "MapInPandas" not in join_plan
          and "FlatMapGroups" not in join_plan),
     ):
         status = "PASS" if got else "FAIL"
         ok = ok and got
         lines.append(f"| `streaming ingest` | {label} | {status} |")
         print(f"{status}  streaming: {label}")
+    shutil.rmtree(sdir, ignore_errors=True)
 
     with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
