@@ -149,7 +149,8 @@ def _ca_store_build(spark, sf_dir: str, root: str | None = None):
     correctness/bench invocations neither leak full tier copies in /tmp
     (ADVICE r3) nor redo the write inside what is nominally a read query.
     Pass ``root`` to force a fresh uncached build — bench.py uses that to
-    time the write and read phases separately (VERDICT r3 item 3)."""
+    time the write (``ca_store_write``) and the read (``ca_store_read``) as
+    separate keys."""
     import atexit
     import shutil
     import tempfile

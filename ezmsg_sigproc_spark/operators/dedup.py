@@ -129,23 +129,17 @@ def minhash_lsh_candidates_with_stats(
     n_hashes: int = 8,
     bands: int = 4,
     max_bucket: int = 50,
-    sig: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Like :func:`minhash_lsh_candidates` but also returns the dropped-bucket
     accounting frame: one row per (band_id, band_sig) bucket that exceeded
     ``max_bucket`` and was excluded, with its size. Nothing is dropped
     silently — callers log/persist this frame next to the candidates (at
     100 TB the oversize buckets are exactly the boilerplate/templated content
-    worth a separate report).
-
-    ``sig``: optionally a precomputed :func:`minhash_signatures` frame (e.g.
-    cached) — callers reusing signatures across several band configurations,
-    and the bench's phase diagnostic, skip the recompute."""
+    worth a separate report)."""
     rows_per_band = n_hashes // bands
     if rows_per_band > 2:
         raise ValueError("band packing supports at most 2 32-bit rows per band")
-    if sig is None:
-        sig = minhash_signatures(df, id_col, text_col, k, n_hashes)
+    sig = minhash_signatures(df, id_col, text_col, k, n_hashes)
 
     def band_sig(b: int):
         # injective pack of the band's 32-bit minhashes into ONE bigint —

@@ -129,9 +129,6 @@ class RollupStore:
         self.spark = spark
         self.root = root
         self.lineage_dir = os.path.join(root, "_lineage")
-        # per-tier phase timings of the most recent write_tier call
-        # (write / footer_stats / commit) — bench telemetry
-        self.last_write_phases: dict[str, dict] = {}
 
     # -- lineage ----------------------------------------------------------
     def _lineage_files(self) -> list[str]:
@@ -331,7 +328,6 @@ class RollupStore:
             # also on failure: a failed write must not leave its staged
             # files behind for good
             shutil.rmtree(staging, ignore_errors=True)
-        self.last_write_phases[tier] = timings
         return {
             "tier": tier,
             "buckets_written": len(stats),

@@ -52,6 +52,27 @@ from .operators import native_build
 _LOCAL_FS = "ezsp.NoForkLocalFileSystem"
 
 
+def _launches_jvm() -> bool:
+    """Whether a session started now launches the driver JVM: no gateway is
+    running and spark-submit did not start this Python."""
+    return SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+
+
+def engine_on_worker_path() -> None:
+    """Put the directory holding this package first on the ``PYTHONPATH``
+    that the driver JVM inherits, and so its Python workers, when this
+    process is about to launch the JVM. Workers import the engine to
+    unpickle its UDFs; without this they find it only when the JVM's working
+    directory happens to hold it. Under spark-submit ``--py-files`` ships
+    the engine instead, and nothing is changed."""
+    if not _launches_jvm():
+        return
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pp = os.environ.get("PYTHONPATH", "")
+    if root not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = root + (os.pathsep + pp if pp else "")
+
+
 def _local_fs_sources() -> tuple[str, str]:
     """The filesystem's Java source, and Spark's Hadoop API jar to build it
     against."""
@@ -68,7 +89,7 @@ def _local_fs_conf() -> dict:
     cannot join a running JVM's classpath, and naming them anyway fails
     every file operation with ClassNotFoundException. Empty, after one
     stderr line, when they cannot be built."""
-    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+    if not _launches_jvm():
         return {}
     fallback = "using Hadoop's stock local filesystem"
     try:
@@ -121,9 +142,8 @@ def get_spark(
         # the default 32, 0.1 s at 4096). On a cluster against an object
         # store the job path only wins once a table has many thousands of
         # partitions — after ts_bucket pruning our reads touch far fewer —
-        # so 4096 is a sane production default too; override via env.
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-                os.environ.get("SPARK_GRAFT_LISTING_THRESHOLD", "4096"))
+        # so 4096 is a sane production default too.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

@@ -99,9 +99,10 @@ def main(argv=None):
                     help="heavy-hitter detection threshold (fraction of rows)")
     args = ap.parse_args(argv)
 
-    from ezmsg_sigproc_spark.session import get_spark
+    from ezmsg_sigproc_spark.session import engine_on_worker_path, get_spark
     from ezmsg_sigproc_spark.sources.pages import generate_pages
 
+    engine_on_worker_path()
     spark = get_spark(app_name="rollup_job", cores=args.cores)
     t0 = time.monotonic()
     if args.pages:

@@ -194,8 +194,9 @@ def main(argv=None):
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args(argv)
 
-    from ezmsg_sigproc_spark.session import get_spark
+    from ezmsg_sigproc_spark.session import engine_on_worker_path, get_spark
 
+    engine_on_worker_path()
     spark = get_spark(app_name="stream_ingest_job", cores=args.cores)
     trig = None if args.trigger == "available-now" else float(args.trigger)
     metrics = run(spark, args.source, args.out, ttl_hours=args.ttl_hours,

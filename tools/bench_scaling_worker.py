@@ -16,8 +16,10 @@ real cluster input decode is spread across executor-local disks, while on one
 box it is a memory-bandwidth-bound scan that would measure the machine, not
 the engine. (Same reason the probe does not push every RAW point through
 Arrow: single-box memory bandwidth saturates at high core counts in a way a
-real 4N-executor cluster — with 4× the memory channels — does not; the
-hw_calibration probe quantifies that machine effect separately.)
+real 4N-executor cluster — with 4× the memory channels — does not.)
+
+``--skew-only`` runs the skewed-input probe instead. ``tools/run_skew_pairs.py``
+runs this worker in the (N, 4N) pair protocol of both scaling gates.
 
 Prints one JSON line with per-phase seconds and total raw rows/sec.
 """
@@ -38,14 +40,6 @@ def main():
     ap.add_argument("--cores", type=int, required=True)
     ap.add_argument("--pages", required=True, help="parquet path of the pages input")
     ap.add_argument("--repeats", type=int, default=4)
-    ap.add_argument("--codec-bin", type=int, default=60,
-                    help="rollup bin (s) feeding the Gorilla phases; 60 = the "
-                         "real 1m tier (job proportions for efficiency_raw), "
-                         "10 = 6x the points (dedicated codec-scaling probe "
-                         "clear of the per-job scheduling floor)")
-    ap.add_argument("--codec-only", action="store_true",
-                    help="time only the Gorilla encode/decode phases (rollup/"
-                         "EWMA run untimed as prep)")
     ap.add_argument("--skew-only", action="store_true",
                     help="skewed-input probe, COMMITTED construction (round "
                          "5): the production-shaped end-to-end job — parquet "
@@ -57,16 +51,6 @@ def main():
                          "(nobody caches the crawl before mitigating skew). "
                          "~40%% of rows remap onto ONE hot url "
                          "(md5-deterministic).")
-    ap.add_argument("--skew-cached", action="store_true",
-                    help="skewed-input DIAGNOSTIC variant (the round-4 "
-                         "committed construction): same mitigation chain but "
-                         "over a pre-cached in-memory signal with per-phase "
-                         "(detect/rollup/ewma) splits. Its short n-core "
-                         "phases sit on the single-box scheduling floor and "
-                         "in-memory-scan bandwidth ceiling (~0.70-0.78 at "
-                         "2->8 cores on this box) that a real N->4N "
-                         "*executor* scale-out does not pay — reported for "
-                         "transparency, not the committed number.")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -128,8 +112,7 @@ def main():
         # and the salted rollup run fused with the parquet scan + signal
         # extract, whose decompression/extract work is CPU-bound and
         # parallelizes cleanly — so THIS is both the honest job shape and
-        # the scaling-relevant one. The cached variant remains available
-        # as --skew-cached and is reported as a diagnostic.
+        # the scaling-relevant one.
         from ezmsg_sigproc_spark.plans.rollup_tiers import (
             heavy_hitter_keys,
             salt_column,
@@ -155,10 +138,10 @@ def main():
         # cores, a ceiling a real N→4N EXECUTOR scale-out does not pay (each
         # executor scans its own distributed-storage split). Measured in the
         # SAME JVM seconds apart from the timed pipeline so each (N,4N) pair
-        # carries its own weather-matched envelope; bench.py divides the
-        # pair's raw efficiency by the pair's envelope efficiency (same
-        # pattern as the committed hw_codec envelope). The hot-row count is
-        # aggregated so Catalyst cannot prune the remap out of the plan.
+        # carries its own weather-matched envelope; run_skew_pairs.py
+        # divides the pair's raw efficiency by the pair's envelope
+        # efficiency. The hot-row count is aggregated so Catalyst cannot
+        # prune the remap out of the plan.
         scan_best = float("inf")
         scan_hot_rows = 0
         for _ in range(args.repeats):
@@ -206,7 +189,6 @@ def main():
             "hot_frac": 0.4,
             "n_salts": 16,
             "hot_keys_detected": n_hot,
-            "composed_bins": 0,
             "source": "parquet-fused",
             "rows_per_sec": round(n_skew / elapsed, 1),
             # raw scan envelope, kept OUT of phases/elapsed: it calibrates
@@ -232,224 +214,55 @@ def main():
         verify="full", emit_blobs=False, num_partitions=probe_partitions,
     ).agg(F.count("*")).collect()
 
-    if args.skew_cached:
-        from ezmsg_sigproc_spark.plans.rollup_tiers import (
-            finalize,
-            heavy_hitter_keys,
-            salt_column,
-        )
-
-        # one hot url carries ~40% of ALL rows (md5-deterministic remap) —
-        # the hot-domain regime where a naive per-key chain serializes on
-        # one task. The timed job is the engine's documented mitigation
-        # (rollup_tiers.salt_column prose, pytest-pinned in
-        # test_salted_rollup_composes_and_feeds_recurrence_exactly):
-        # heavy-hitter detection, salt the DETECTED hot key only, salted
-        # TWO-STAGE aggregation — per-(url, salt, bin) partials (map-side
-        # combine: the exchange carries partial rows, never raw rows)
-        # composed across salts at bin boundaries — then the recurrence
-        # (EWMA) over the composed bin means, the only place a recurrence
-        # may run. No raw-row repartition: that variant is pinned to the
-        # single-box shuffle-bandwidth ceiling (~0.7 at 2→8 cores,
-        # measured) and is avoidable for aggregation chains by design.
-        # n_salts is FIXED across parallelism levels so both levels time the
-        # identical job. The timed phase INCLUDES the heavy-hitter scan —
-        # detect-then-salt is the end-to-end mitigation, not just the salt.
-        hot = (F.conv(F.substring(F.md5(F.concat_ws(
-            "|", F.col("url"), F.col("ts").cast("string"))), 1, 4), 16, 10)
-            % 100) < 40
-        sig_skew = sig.withColumn(
-            "url", F.when(hot, F.lit("https://hot.example/p/0")).otherwise(F.col("url"))
-        ).cache()
-        n_skew = sig_skew.count()
-        sig.unpersist()
-        best = {"skew_detect": float("inf"), "skew_rollup": float("inf"),
-                "skew_ewma": float("inf")}
-        n_bins = 0
-        n_hot = 0
-        for _ in range(args.repeats):
-            td = time.monotonic()
-            hot_keys = heavy_hitter_keys(sig_skew, "url", threshold_frac=0.01)
-            n_hot = len(hot_keys)
-            t0 = time.monotonic()
-            salted = salt_column(sig_skew, "url", n_salts=16, hot_keys=hot_keys)
-            per_salt = (
-                salted.withColumn("bin_m", F.floor(F.col("ts") / 60).cast("bigint"))
-                .groupBy("url", "_salt", "bin_m")
-                .agg(F.count("value").alias("n"), F.sum("value").alias("sum"),
-                     F.min("value").alias("min"), F.max("value").alias("max"),
-                     F.sum(F.col("value") * F.col("value")).alias("sum_sq"))
-            )
-            composed = finalize(
-                per_salt.groupBy("url", "bin_m").agg(
-                    F.sum("n").alias("n"), F.sum("sum").alias("sum"),
-                    F.min("min").alias("min"), F.max("max").alias("max"),
-                    F.sum("sum_sq").alias("sum_sq")),
-                60).cache()
-            n_bins = composed.count()
-            t1 = time.monotonic()
-            ewma(composed.select("url", F.col("bin_ts").alias("ts"),
-                                 F.col("mean").alias("value")),
-                 alpha=0.2, key_cols=["url"], ts_col="ts", value_col="value",
-                 num_partitions=probe_partitions) \
-                .agg(F.sum("ewma")).collect()
-            t2 = time.monotonic()
-            composed.unpersist()
-            best["skew_detect"] = min(best["skew_detect"], t0 - td)
-            best["skew_rollup"] = min(best["skew_rollup"], t1 - t0)
-            best["skew_ewma"] = min(best["skew_ewma"], t2 - t1)
-        elapsed = sum(best.values())
-        print(json.dumps({
-            "cores": args.cores,
-            "elapsed": round(elapsed, 3),
-            "phases": {k: round(v, 3) for k, v in best.items()},
-            "rows": n_skew,
-            "hot_frac": 0.4,
-            "n_salts": 16,
-            "hot_keys_detected": n_hot,
-            "composed_bins": n_bins,
-            "source": "cached-diagnostic",
-            "rows_per_sec": round(n_skew / elapsed, 1),
-        }))
-        spark.stop()
-        return
-
-    cbin = args.codec_bin
     best = {"rollup": float("inf"), "ewma_1m": float("inf"),
             "gorilla": float("inf"), "gorilla_decode": float("inf")}
-    if args.codec_only:
-        del best["rollup"], best["ewma_1m"]
-    n_out = pts_rows = enc_rows = 0
-    ckpoints = None
-    if args.codec_only:
-        # codec-only: build + cache the codec input once for all repeats
-        # (the rollup feeding it is prep, not the thing being measured)
-        ckpoints = rollup_base(sig, cbin).select(
+    n_out = pts_rows = 0
+    for _ in range(args.repeats):
+        t0 = time.monotonic()
+        r1m = rollup_base(sig, 60)
+        r1h = rollup_next(r1m, 60)
+        r1d = rollup_next(r1h, 24)
+        n_out = r1m.unionByName(r1h).unionByName(r1d).count()
+        t1 = time.monotonic()
+        # Arrow kernels over the 1m TIER points (the north-star stream);
+        # the one-time point-cache fill sits between t1 and tk, untimed
+        points = r1m.select(
             "url",
-            (F.col("bin_m") * cbin).cast("double").alias("ts"),
+            (F.col("bin_m") * 60).cast("double").alias("ts"),
             (F.col("sum") / F.col("n")).alias("value"),
         ).cache()
-        ckpoints.count()
-    for _ in range(args.repeats):
-        points = None
-        if not args.codec_only:
-            t0 = time.monotonic()
-            r1m = rollup_base(sig, 60)
-            r1h = rollup_next(r1m, 60)
-            r1d = rollup_next(r1h, 24)
-            n_out = r1m.unionByName(r1h).unionByName(r1d).count()
-            t1 = time.monotonic()
-            # Arrow kernels over the 1m TIER points (the north-star stream);
-            # the one-time point-cache fill sits between t1 and tk, untimed
-            points = r1m.select(
-                "url",
-                (F.col("bin_m") * 60).cast("double").alias("ts"),
-                (F.col("sum") / F.col("n")).alias("value"),
-            ).cache()
-            pts_rows = points.count()
-            tk = time.monotonic()
-            ewma(points, alpha=0.2, key_cols=["url"], ts_col="ts",
-                 value_col="value", num_partitions=probe_partitions) \
-                .agg(F.sum("ewma")).collect()
-            t2 = time.monotonic()
-        # codec input: the 1m tier itself by default (real job proportions);
-        # --codec-bin 10 feeds 6x the points for the dedicated codec-scaling
-        # probe (clear of the per-job scheduling floor). Cache fill untimed.
-        if args.codec_only:
-            cpoints = ckpoints
-        elif cbin == 60 and points is not None:
-            cpoints = points
-        else:
-            cpoints = rollup_base(sig, cbin).select(
-                "url",
-                (F.col("bin_m") * cbin).cast("double").alias("ts"),
-                (F.col("sum") / F.col("n")).alias("value"),
-            ).cache()
-        enc_rows = cpoints.count()
-        t2b = time.monotonic()
+        pts_rows = points.count()
+        tk = time.monotonic()
+        ewma(points, alpha=0.2, key_cols=["url"], ts_col="ts",
+             value_col="value", num_partitions=probe_partitions) \
+            .agg(F.sum("ewma")).collect()
+        t2 = time.monotonic()
         blobs = gorilla_compress(
-            cpoints.withColumn("bucket", F.floor(F.col("ts") / 86400).cast("bigint")),
+            points.withColumn("bucket", F.floor(F.col("ts") / 86400).cast("bigint")),
             key_cols=["url", "bucket"], ts_col="ts", value_col="value",
             verify="full", emit_blobs=True, num_partitions=probe_partitions,
         ).cache()
         blobs.agg(F.sum("ts_bytes"), F.sum("val_bytes"), F.sum("n_points"),
                   F.min("roundtrip_ok")).collect()
         t3 = time.monotonic()
-        # storage-tier READ path: lockstep batch decode of every blob back to
-        # points (the round-3 vectorized decoder)
+        # storage-tier READ path: decode every blob back to points
         gorilla_decode(blobs, key_cols=["url", "bucket"], ts_col="ts",
                        value_col="value").agg(F.count("*"), F.sum("value")).collect()
         t4 = time.monotonic()
         blobs.unpersist()
-        if points is not None:
-            points.unpersist()
-        if cpoints is not points and cpoints is not ckpoints:
-            cpoints.unpersist()
-        if not args.codec_only:
-            best["rollup"] = min(best["rollup"], t1 - t0)
-            best["ewma_1m"] = min(best["ewma_1m"], t2 - tk)
-        best["gorilla"] = min(best["gorilla"], t3 - t2b)
+        points.unpersist()
+        best["rollup"] = min(best["rollup"], t1 - t0)
+        best["ewma_1m"] = min(best["ewma_1m"], t2 - tk)
+        best["gorilla"] = min(best["gorilla"], t3 - t2)
         best["gorilla_decode"] = min(best["gorilla_decode"], t4 - t3)
 
     elapsed = sum(best.values())
-    combined_runs = []
-    if not args.codec_only:
-        # Headline timing: the SAME north-star job as TWO Spark actions with
-        # zero duplicated compute. Action 1 materializes the 1m rollup into
-        # cache (raw -> 1m partial aggregation, the dominant phase). Action 2
-        # unions every downstream consumer — 1h/1d tier re-aggregation, EWMA,
-        # and Gorilla encode->decode (the decoder consumes the encoder's
-        # output directly) — into ONE collect, so independent stages overlap
-        # and the per-action scheduling floor is paid twice, not five times.
-        # The phase-split loop above (~0.4 s floor per action, 4 actions)
-        # stays as per-phase diagnostics. No work is computed twice: every
-        # consumer in action 2 reads the action-1 cache.
-        for _ in range(1):  # one combined pass per process (diagnostic)
-            r1m = rollup_base(sig, 60).cache()
-            t0 = time.monotonic()
-            r1m.count()  # action 1: raw -> 1m rollup, materialized to cache
-            r1h = rollup_next(r1m, 60)
-            r1d = rollup_next(r1h, 24)
-            tiers_part = (
-                r1h.unionByName(r1d)
-                .agg(F.count("*").cast("double").alias("v"))
-                .select(F.lit("coarse_tiers_rows").alias("k"), "v"))
-            pts = r1m.select(
-                "url",
-                (F.col("bin_m") * 60).cast("double").alias("ts"),
-                (F.col("sum") / F.col("n")).alias("value"),
-            )
-            ewma_part = (
-                ewma(pts, alpha=0.2, key_cols=["url"], ts_col="ts",
-                     value_col="value", num_partitions=probe_partitions)
-                .agg(F.sum("ewma").alias("v")).select(F.lit("ewma_sum").alias("k"), "v"))
-            blobs2 = gorilla_compress(
-                pts.withColumn("bucket", F.floor(F.col("ts") / 86400).cast("bigint")),
-                key_cols=["url", "bucket"], ts_col="ts", value_col="value",
-                verify="full", emit_blobs=True, num_partitions=probe_partitions,
-            )
-            dec_part = (
-                gorilla_decode(blobs2, key_cols=["url", "bucket"], ts_col="ts",
-                               value_col="value")
-                .agg(F.sum("value").alias("v")).select(F.lit("decode_sum").alias("k"), "v"))
-            # action 2: every downstream consumer of the cached 1m tier
-            tiers_part.unionByName(ewma_part).unionByName(dec_part).collect()
-            combined_runs.append(time.monotonic() - t0)
-            r1m.unpersist()
     print(json.dumps({
         "cores": args.cores,
         "elapsed": round(elapsed, 3),
         "phases": {k: round(v, 3) for k, v in best.items()},
-        "combined_note": "combined_runs = the same job as TWO actions (1m "
-                         "rollup to cache, then all downstream consumers in "
-                         "one union, zero duplicated compute) — pipelining "
-                         "diagnostic; elapsed/rows_per_sec stay the "
-                         "phase-split sum, same construction as round 2",
-        "combined_runs": [round(x, 3) for x in combined_runs],
         "rows": n_rows,
         "tier_points": pts_rows,
-        "codec_points": enc_rows,
-        "codec_bin": cbin,
         "rows_per_sec": round(n_rows / elapsed, 1),
         "tiers_out_rows": n_out,
     }))

@@ -1,32 +1,66 @@
-"""Standalone skewed-scaling pair runner.
+"""The scaling gates: the same job at local[N] and local[4N], in pairs.
 
-Runs the SAME pre-registered protocol as bench.py's criterion section 3c —
-N_PAIRS interleaved (N, 4N) fresh-JVM pairs in ABBA order, repeats=2 inside
-each worker, --skew-only committed construction — but with no other bench
-sections competing for the wall budget, so all pairs complete. Used to top
-up the pair count when the in-budget bench run sheds pairs (round 6: the
-2400 s driver budget left 1/3 skewed pairs).
+Pre-registered protocol, identical for both probes (no run is discarded):
+  1. ``--pairs`` interleaved (N, 4N) pairs in ABBA order —
+     (N,4N),(4N,N),(N,4N),… — so a monotone host drift biases adjacent
+     pairs in opposite directions; every run is a fresh JVM
+     (``tools/bench_scaling_worker.py``);
+  2. inside each run every phase is timed ``--repeats`` times and the
+     per-phase minimum taken;
+  3. per pair, efficiency = (4N rows/s) / (4 × N rows/s) from the pair's
+     phase-sum walls;
+  4. the gate number is the median over pairs, criterion >= 0.8.
 
-Gate construction is identical to bench.py (pre-registered there before any
-round-6 run): committed number = efficiency_scan_adjusted = median over
-pairs of raw_pair_eff / scan_envelope_pair_eff, criterion >= 0.8; the raw
-fused medians are reported unadjusted alongside.
+``--probe uniform`` (the worker's default job: tiered rollup, EWMA and
+Gorilla encode/decode over the 1m tier) is judged on the raw median.
+``--probe skew`` (``--skew-only``: one hot url carries ~40 % of rows through
+the salted two-stage mitigation, fused with the parquet scan) is judged on
+efficiency_scan_adjusted: the median over pairs of raw_pair_eff /
+scan_envelope_pair_eff, where each worker times its own raw scan envelope in
+the same JVM; the raw fused medians are reported unadjusted alongside.
 
 Usage:
-    python tools/run_skew_pairs.py --pages /tmp/bench_pages_scaling27.parquet \
-        --out BENCH_local_r06_skew3.json [--pairs 3] [--n 2] [--probe skew]
+    python tools/run_skew_pairs.py --pages PAGES.parquet --out OUT.json \
+        [--pairs 3] [--n 2] [--repeats 2] [--probe skew|uniform]
 
-``--probe uniform`` runs the worker's default uniform probe instead (same
-pair/median protocol; no scan envelope — the uniform gate is raw).
+When ``--pages`` does not exist, the probe input is generated there first:
+``PROBE_URLS`` × ``PROBE_SAMPLES`` synthetic pages (~97M rows). Smaller
+inputs finish in seconds at 4N cores, where the ~0.5 s per-job scheduling
+floor dominates the ratio; at this size every phase stays >= 10× that floor
+at 4N on 8 cores.
 """
 from __future__ import annotations
 
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+PROBE_URLS = 108_000
+PROBE_SAMPLES = 1000
+
+
+def write_probe_input(path: str) -> None:
+    """Generate the probe's pages table at ``path``, in a JVM that is shut
+    down again before the pair runs start."""
+    from ezmsg_sigproc_spark.session import get_spark
+    from ezmsg_sigproc_spark.sources.pages import generate_pages
+    from perfbench import harness
+
+    cores = harness.host_cores()
+    spark = get_spark(app_name="probe_input", cores=cores)
+    try:
+        generate_pages(spark, n_urls=PROBE_URLS, samples_per_url=PROBE_SAMPLES,
+                       partitions=cores * 3).write.mode("overwrite").parquet(path)
+        spark.stop()
+    finally:
+        harness.shutdown_jvm()
 
 
 def worker_run(cmd: list[str], timeout: int) -> dict:
@@ -58,8 +92,9 @@ def main() -> None:
     ap.add_argument("--probe", choices=("skew", "uniform"), default="skew")
     args = ap.parse_args()
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    worker = os.path.join(here, "bench_scaling_worker.py")
+    if not os.path.exists(args.pages):
+        write_probe_input(args.pages)
+    worker = os.path.join(ROOT, "tools", "bench_scaling_worker.py")
     lo_c, hi_c = args.n, args.n * 4
     runs: dict[int, list[dict]] = {lo_c: [], hi_c: []}
     for i in range(args.pairs):
@@ -87,16 +122,16 @@ def main() -> None:
             scan = (slo / shi) / 4.0
             scan_effs.append(round(scan, 3))
             adj_effs.append(round(raw / scan, 3))
+            # diagnostic: mitigation compute with the scan wall subtracted
+            # out of both levels (noisy when the 4N remainder is small)
             if hi["elapsed"] - shi > 1.0 and lo["elapsed"] - slo > 1.0:
                 sub_effs.append(round(
                     ((lo["elapsed"] - slo) / (hi["elapsed"] - shi)) / 4.0, 3))
 
     def med(xs: list[float]) -> float | None:
-        # true midpoint median (ADVICE r6: sorted[len//2] is the UPPER
-        # middle for even-length lists, which biases the committed gate
-        # number upward after error-pair filtering)
-        import statistics
-
+        # true midpoint median: sorted[len//2] is the UPPER middle for
+        # even-length lists, which biases the gate number upward after
+        # error-pair filtering
         return round(statistics.median(xs), 3) if xs else None
 
     out = {
@@ -104,10 +139,8 @@ def main() -> None:
         "protocol": (f"{args.pairs} interleaved (N,4N)=({lo_c},{hi_c}) "
                      f"fresh-JVM pairs, ABBA order, repeats={args.repeats} "
                      "per worker, "
-                     + ("--skew-only committed construction; identical to "
-                        "bench.py section 3c" if args.probe == "skew" else
-                        "uniform probe (worker default); identical to "
-                        "bench.py section 3a")),
+                     + ("--skew-only construction" if args.probe == "skew"
+                        else "uniform probe (worker default)")),
         "gate_construction": (
             "committed skewed number = efficiency_scan_adjusted = median "
             "over pairs of raw_pair_eff / scan_envelope_pair_eff (same-JVM "
