@@ -13,8 +13,9 @@ The session, its environment and the CPU accounting are
 ``perfbench/harness.py``'s: C1 and serial GC in the driver JVM, one thread
 per Python worker, a run directory inside the checkout, CPU seconds (user +
 system of this process, the JVM and its Python workers) and the host's steal
-time read from /proc. After one untimed warm-up, every key runs ``SAMPLES``
-times; each sample's wall and CPU seconds are kept with their medians.
+time read from /proc. Every key runs once untimed and then ``SAMPLES``
+times; each sample's wall and CPU seconds are kept with their medians. The
+untimed store run builds and reads a throwaway root.
 
 Input: ``$SPARK_GRAFT_SF_DIR`` (default the sf0.1 test data). Prints one
 summary JSON line and writes the full JSON to ``$BENCH_JSON_OUT`` (default
@@ -94,28 +95,34 @@ def main() -> None:
                               "steal_s": round(harness.steal_s() - s0, 2)})
             return result
 
-        # warm up the JVM (codegen, parquet reader) and the Python worker
-        # pool (pandas import), so the samples measure the queries, not
-        # first-use class loading
-        ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-        ev.groupBy("user_id").count().count()
-        ev.limit(1024).groupBy("user_id").applyInPandas(
-            lambda p: p, schema=ev.schema).count()
-        t_warm = time.monotonic()
+        # each key first runs once untimed, just before its samples, so that
+        # every sample finds the key's own plan, codegen and UDF paths warm
+        warmups: dict[str, float] = {}
+
+        def untimed(key: str, action) -> object:
+            t0 = time.monotonic()
+            result = action()
+            warmups[key] = round(time.monotonic() - t0, 3)
+            return result
 
         for name in HEADLINE:
             fn = query_fn(name)
+            untimed(name, lambda: fn(spark, SF_DIR).count())
             for _ in range(SAMPLES):
                 timed(name, lambda: fn(spark, SF_DIR).count())
-        for i in range(SAMPLES):
-            root = st.path("out", f"ca_store_{i}")
-            store, tmin, tmax = timed(
+
+        def store_round(root: str, run) -> None:
+            store, tmin, tmax = run(
                 "ca_store_write",
                 lambda: entry_queries._ca_store_build(spark, SF_DIR, root=root))
-            timed("ca_store_read", lambda: read_resolution(
+            run("ca_store_read", lambda: read_resolution(
                 store, 7200, t0=tmin + 4000.0, t1=tmax - 4000.0).agg(
                     F.count("*"), F.sum("sum")).collect())
             shutil.rmtree(root, ignore_errors=True)
+
+        store_round(st.path("out", "ca_store_warmup"), untimed)
+        for i in range(SAMPLES):
+            store_round(st.path("out", f"ca_store_{i}"), timed)
         spark.stop()
         elapsed = time.monotonic() - t_start
     finally:
@@ -145,7 +152,7 @@ def main() -> None:
     }
     full = {**summary, "settings": st.describe(),
             "session_s": round(t_session - t_start, 2),
-            "warmup_s": round(t_warm - t_session, 2), "keys": keys}
+            "warmup_s": warmups, "keys": keys}
     with open(out_path, "w") as f:
         json.dump(full, f, indent=1)
         f.write("\n")

@@ -169,10 +169,8 @@ def _ca_store_build(spark, sf_dir: str, root: str | None = None):
     if root is None:
         atexit.register(shutil.rmtree, target, ignore_errors=True)
     store = RollupStore(spark, target)
-    store.write_tier("1m", rollup_base(ev, 60), resume=False)
-    store.write_tier(
-        "1h", rollup_next(store.read_tier("1m").drop("ts_bucket"), 60),
-        resume=False)
+    store.write_tier("1m", rollup_base(ev, 60))
+    store.write_tier("1h", rollup_next(store.read_tier("1m").drop("ts_bucket"), 60))
     b = ev.agg(F.min("ts").alias("t0"), F.max("ts").alias("t1")).collect()[0]
     result = (store, float(b.t0), float(b.t1))
     if root is None:

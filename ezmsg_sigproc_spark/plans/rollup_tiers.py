@@ -23,10 +23,13 @@ Physical design (SURVEY.md §7, BASELINE.json north_rule):
   after the bucket's files land. On restart, buckets present in lineage are
   skipped — the batch analog of the reference's carried operator state
   (SURVEY.md §2.11: partial bins / zi / phase become resume checkpoints).
-- **Skew.** The 1m groupBy key is (url, bin) — high cardinality, so Spark's
-  partial aggregation + AQE absorb hot domains. The per-key *ordered* kernels
-  (EWMA etc.) are where a hot url would serialize; :func:`salted_repartition`
-  splits those by (url, salt) when a single url's history outgrows a task.
+- **Skew.** The 1m groupBy key is (url, bin) — high cardinality, and the
+  exchange carries map-side partials, so a hot url's raw rows never meet on
+  one reducer; the 1m rollup has no salted route (salted two-stage
+  partials cost more CPU on a 40 %-hot-url input, SCALE.md §Skew). The
+  per-key *ordered* kernels (EWMA etc.) are where a hot url would
+  serialize; :func:`salted_repartition` splits those by (url, salt) when a
+  single url's history outgrows a task.
 """
 
 from __future__ import annotations
@@ -189,7 +192,7 @@ class RollupStore:
         }))
 
     # -- write ------------------------------------------------------------
-    def write_tier(self, tier: str, rollup: DataFrame, resume: bool = True) -> dict:
+    def write_tier(self, tier: str, rollup: DataFrame) -> dict:
         """Write one tier partitioned by ts_bucket, skipping buckets already in
         lineage (checkpoint-resume).
 
@@ -205,10 +208,9 @@ class RollupStore:
 
         Semantics note: resume is bucket-granular and assumes immutable input
         per bucket — rows arriving for a bucket already committed to lineage
-        are intentionally not re-ingested. ``resume=False`` recomputes the
-        tier but still never deletes a lineage-committed bucket; to genuinely
-        reprocess committed buckets use :meth:`reopen_buckets` (removes the
-        buckets' lineage rows, then their data) or a fresh root.
+        are intentionally not re-ingested. To reprocess committed buckets use
+        :meth:`reopen_buckets` (removes the buckets' lineage rows, then their
+        data) or a fresh root.
 
         CONCURRENT writers are safe under the same immutable-input-per-bucket
         assumption (two attempts at the same bucket produce identical
@@ -230,7 +232,7 @@ class RollupStore:
         """
         bin_seconds = TIERS[tier]
         out = rollup.withColumn("ts_bucket", _bucket_col(bin_seconds))
-        done = self.completed_buckets(tier) if resume else set()
+        done = self.completed_buckets(tier)
         if done:
             out = out.filter(~F.col("ts_bucket").isin(list(done)))
         tier_dir = os.path.join(self.root, f"tier={tier}")
@@ -501,68 +503,47 @@ def heavy_hitter_keys(df: DataFrame, key_col: str, threshold_frac: float = 0.01,
     return [r[key_col] for r in rows if r["_gid"] == 0 and r["_cnt"] >= floor]
 
 
-def run_tiered_rollup(
-    spark: SparkSession,
-    pages: DataFrame,
-    store: RollupStore | None = None,
-    resume: bool = True,
-    skew_guard: bool = False,
-    n_salts: int = 16,
-    hot_threshold_frac: float = 0.01,
-    hot_sample_frac: float = 0.001,
-) -> dict:
-    """End-to-end: pages → 1m partials → 1h → 1d; optional persisted store.
+def run_tiered_rollup(spark: SparkSession, pages: DataFrame,
+                      store: RollupStore) -> dict:
+    """End-to-end: pages → 1m partials → 1h → 1d, each tier written to
+    ``store`` (buckets already in lineage are skipped).
 
-    Returns metrics (rows per tier + lineage stats). When ``store`` is None
-    the tiers are computed and counted but not persisted (bench mode).
-
-    ``skew_guard=True`` makes the hot-domain mitigation AUTOMATIC (VERDICT
-    r4 item 8 — at 10^12 web rows skew is the default, not the exception):
-    :func:`heavy_hitter_keys` scans a sample for urls above
-    ``hot_threshold_frac`` of all rows; if any are found, the 1m tier is
-    computed by the salted two-stage aggregation (salt only the detected
-    keys → per-(url, _salt, bin) partials with map-side combine → compose
-    partials across salts), whose output equals :func:`rollup_base`
-    bin-for-bin (decomposable partials — pytest-pinned). With no hot keys
-    the plain path runs; either way the coarser tiers re-aggregate the same
-    1m partials. Metrics record ``hot_keys`` so the decision is auditable.
-    """
-    sig = pages_signal(pages)
-    hot_keys: list = []
-    if skew_guard:
-        # hot_sample_frac: 0.001 suits web scale (~10^9-row sample at 10^12
-        # rows); small inputs should pass a larger fraction — a sample of a
-        # few dozen rows makes every sampled url look hot
-        hot_keys = heavy_hitter_keys(sig, "url", threshold_frac=hot_threshold_frac,
-                                     sample_frac=hot_sample_frac)
-    if hot_keys:
-        per_salt = (
-            salt_column(sig, "url", n_salts=n_salts, hot_keys=hot_keys)
-            .withColumn("bin_m", F.floor(F.col("ts") / TIERS["1m"]).cast("bigint"))
-            .groupBy("url", "_salt", "bin_m")
-            .agg(F.count("value").alias("n"), F.sum("value").alias("sum"),
-                 F.min("value").alias("min"), F.max("value").alias("max"),
-                 F.sum(F.col("value") * F.col("value")).alias("sum_sq"))
-        )
-        r1m = per_salt.groupBy("url", "bin_m").agg(
-            F.sum("n").alias("n"), F.sum("sum").alias("sum"),
-            F.min("min").alias("min"), F.max("max").alias("max"),
-            F.sum("sum_sq").alias("sum_sq")).cache()
-    else:
-        r1m = rollup_base(sig, TIERS["1m"]).cache()
+    Returns metrics: each tier's :meth:`RollupStore.write_tier` dict and its
+    row count. The 1m tier is the plain :func:`rollup_base` aggregation; a hot
+    url needs no salting here (see the module docstring's Skew note)."""
+    r1m = rollup_base(pages_signal(pages), TIERS["1m"]).cache()
     r1h = rollup_next(r1m, 60).cache()
     r1d = rollup_next(r1h, 24)
-    metrics: dict = {"skew_guard": bool(skew_guard), "hot_keys": hot_keys}
-    if store is not None:
-        metrics["write_1m"] = store.write_tier("1m", r1m, resume=resume)
-        metrics["write_1h"] = store.write_tier("1h", r1h, resume=resume)
-        metrics["write_1d"] = store.write_tier("1d", r1d, resume=resume)
-    metrics["rows_1m"] = r1m.count()
-    metrics["rows_1h"] = r1h.count()
-    metrics["rows_1d"] = r1d.count()
+    metrics = {
+        "write_1m": store.write_tier("1m", r1m),
+        "write_1h": store.write_tier("1h", r1h),
+        "write_1d": store.write_tier("1d", r1d),
+        "rows_1m": r1m.count(),
+        "rows_1h": r1h.count(),
+        "rows_1d": r1d.count(),
+    }
     r1m.unpersist()
     r1h.unpersist()
     return metrics
+
+
+def gorilla_blobs_1m(partials: DataFrame) -> DataFrame:
+    """Gorilla blocks of a 1m tier's bin-mean series: one block per (url, day
+    ``bucket``), each decoded back and checked (``verify="full"``). Input is
+    1m partials (``url, bin_m, n, sum, …``): a stored tier read without
+    ``ts_bucket``, or a streaming micro-batch of closed windows."""
+    from ..operators.compression import gorilla_compress
+
+    points = partials.select(
+        "url",
+        (F.col("bin_m") * TIERS["1m"]).cast("double").alias("ts"),
+        (F.col("sum") / F.col("n")).alias("value"),
+    )
+    return gorilla_compress(
+        points.withColumn("bucket", F.floor(F.col("ts") / 86400).cast("bigint")),
+        key_cols=["url", "bucket"], ts_col="ts", value_col="value",
+        verify="full", emit_blobs=True,
+    )
 
 
 def read_resolution(

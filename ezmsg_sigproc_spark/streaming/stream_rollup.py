@@ -47,21 +47,11 @@ def write_gorilla_batch(batch_df: DataFrame, batch_id: int, blobs_path: str) -> 
     """Idempotent per-micro-batch Gorilla compaction sink: encode the batch's
     closed 1m windows and OVERWRITE ``<blobs_path>/batch_id=<id>``. Re-running
     the same batch_id (foreachBatch retry) replaces, never duplicates."""
-    from ..operators.compression import gorilla_compress
+    from ..plans.rollup_tiers import gorilla_blobs_1m
 
     if batch_df.isEmpty():
         return
-    points = batch_df.select(
-        "url",
-        (F.col("bin_m") * 60).cast("double").alias("ts"),
-        (F.col("sum") / F.col("n")).alias("value"),
-    )
-    blobs = gorilla_compress(
-        points.withColumn("bucket", F.floor(F.col("ts") / 86400).cast("bigint")),
-        key_cols=["url", "bucket"], ts_col="ts", value_col="value",
-        verify="full", emit_blobs=True,
-    )
-    blobs.write.mode("overwrite").partitionBy("bucket").parquet(
+    gorilla_blobs_1m(batch_df).write.mode("overwrite").partitionBy("bucket").parquet(
         f"{blobs_path}/batch_id={batch_id}"
     )
 

@@ -36,6 +36,12 @@ def test_rollup_job_compress_retain_and_resume(spark, tmp_path):
         assert (m2[f"write_{tier}"]["buckets_skipped"]
                 == m1[f"write_{tier}"]["buckets_written"])
 
+    # a resumed run that writes no 1m bucket keeps the blobs it finds: no
+    # re-encode of the retained hours only
+    m3 = run(spark, pages, out, compress_1m=blobs, retain_1m_hours=2)
+    assert m3["write_1m"]["buckets_written"] == 0
+    assert m3["compress_1m"] == m1["compress_1m"]
+
 
 def test_rollup_job_rejects_retention_below_one_hour(spark, tmp_path):
     """``retain_1m_hours=0`` once took ``done[-0] == done[0]`` as the cutoff

@@ -75,12 +75,12 @@ def test_store_resume_and_retention(spark, tmp_path):
     # hour-buckets (retention needs ≥2 partitions to drop one)
     pages = generate_pages(spark, n_urls=20, samples_per_url=4000)
     store = RollupStore(spark, str(tmp_path / "lake"))
-    m1 = run_tiered_rollup(spark, pages, store=store, resume=True)
+    m1 = run_tiered_rollup(spark, pages, store=store)
     assert m1["write_1m"]["buckets_written"] > 0
     written_first = m1["write_1m"]["buckets_written"]
 
     # resume: second run skips every bucket (checkpointed via lineage)
-    m2 = run_tiered_rollup(spark, pages, store=store, resume=True)
+    m2 = run_tiered_rollup(spark, pages, store=store)
     assert m2["write_1m"]["buckets_written"] == 0
     assert m2["write_1m"]["buckets_skipped"] == written_first
 
@@ -104,7 +104,7 @@ def test_bucket_writer_one_file_per_bucket_and_contiguity_guard(
     covered belonged to the store's former pyarrow bucket writer; Spark's
     dynamic-partition writer sorts each task's rows by partition itself.)"""
     store = RollupStore(spark, str(tmp_path / "lake"))
-    store.write_tier("1m", rollup_base(pages_signal(pages), 60), resume=False)
+    store.write_tier("1m", rollup_base(pages_signal(pages), 60))
     tier_dir = os.path.join(store.root, "tier=1m")
     for d in os.listdir(tier_dir):
         assert d.startswith("ts_bucket="), d
@@ -145,7 +145,7 @@ def test_lineage_stats_match_true_bucket_counts(spark, pages, tmp_path):
     counts."""
     store = RollupStore(spark, str(tmp_path / "lake"))
     r1m = rollup_base(pages_signal(pages), 60)
-    store.write_tier("1m", r1m, resume=False)
+    store.write_tier("1m", r1m)
     lin = (
         spark.read.parquet(os.path.join(store.root, "_lineage"))
         .filter(F.col("tier") == "1m")
@@ -210,7 +210,7 @@ def test_store_crash_between_data_and_lineage_no_duplicates(spark, tmp_path):
 
     store._append_lineage = boom
     try:
-        store.write_tier("1m", r1m, resume=True)
+        store.write_tier("1m", r1m)
     except RuntimeError:
         pass
     assert store.completed_buckets("1m") == set()  # nothing in lineage
@@ -219,12 +219,12 @@ def test_store_crash_between_data_and_lineage_no_duplicates(spark, tmp_path):
 
     # resumed run: redoes every bucket idempotently (overwrite, not append)
     store._append_lineage = orig_append
-    m = store.write_tier("1m", r1m, resume=True)
+    m = store.write_tier("1m", r1m)
     assert m["buckets_skipped"] == 0 and m["buckets_written"] > 0
     assert store.read_tier("1m").count() == expected
 
     # and a further resume skips everything
-    m2 = store.write_tier("1m", r1m, resume=True)
+    m2 = store.write_tier("1m", r1m)
     assert m2["buckets_written"] == 0
     assert store.read_tier("1m").count() == expected
 
@@ -242,7 +242,7 @@ def test_read_resolution_tier_routing(spark, tmp_path):
 
     pages = generate_pages(spark, n_urls=15, samples_per_url=3000)
     store = RollupStore(spark, str(tmp_path / "lake"))
-    run_tiered_rollup(spark, pages, store=store, resume=True)
+    run_tiered_rollup(spark, pages, store=store)
     sig = pages_signal(pages)
 
     # 5-minute grid → served from the 1m tier re-aggregated ×5
@@ -279,7 +279,7 @@ def test_reopen_buckets_reingests_late_rows(spark, tmp_path):
     pages = generate_pages(spark, n_urls=10, samples_per_url=2000)
     store = RollupStore(spark, str(tmp_path / "lake"))
     r1m = rollup_base(pages_signal(pages), 60)
-    store.write_tier("1m", r1m, resume=True)
+    store.write_tier("1m", r1m)
     buckets = sorted(store.completed_buckets("1m"))
     target = buckets[0]
 
@@ -294,7 +294,7 @@ def test_reopen_buckets_reingests_late_rows(spark, tmp_path):
     assert n == 1
     assert target not in store.completed_buckets("1m")
 
-    m = store.write_tier("1m", augmented, resume=True)
+    m = store.write_tier("1m", augmented)
     assert m["buckets_written"] == 1 and m["buckets_skipped"] == len(buckets) - 1
 
     got = store.read_tier("1m")
@@ -490,8 +490,8 @@ def test_read_resolution_unaligned_bounds_and_partition_pruning(spark, tmp_path)
     sig = pages_signal(pages)
     store = RollupStore(spark, str(tmp_path / "lake"))
     r1m = rollup_base(sig, 60)
-    store.write_tier("1m", r1m, resume=False)
-    store.write_tier("1h", rollup_next(r1m, 60), resume=False)
+    store.write_tier("1m", r1m)
+    store.write_tier("1h", rollup_next(r1m, 60))
 
     b = sig.agg(F.min("ts").alias("t0"), F.max("ts").alias("t1")).collect()[0]
     t0, t1 = b.t0 + 5000.0, b.t1 - 5000.0  # deliberately unaligned to 7200
@@ -531,7 +531,7 @@ def test_read_resolution_bucket_bound_is_a_partition_filter(spark, tmp_path):
 
     pages = generate_pages(spark, n_urls=3, samples_per_url=8000)
     store = RollupStore(spark, str(tmp_path / "lake"))
-    store.write_tier("1m", rollup_base(pages_signal(pages), 60), resume=False)
+    store.write_tier("1m", rollup_base(pages_signal(pages), 60))
     buckets = sorted(store.completed_buckets("1m"))
     assert len(buckets) >= 4
     lo, hi = buckets[1], buckets[2]
@@ -576,10 +576,10 @@ def test_concurrent_writers_and_read_mid_write(spark, pages, tmp_path):
     observations = []
     lineage_checked = 0
     with ThreadPoolExecutor(2) as ex:
-        # both writers launched with resume=True against an EMPTY lineage:
-        # each sees zero completed buckets, so both attempt every bucket
-        f1 = ex.submit(store.write_tier, "1m", r1m, True)
-        f2 = ex.submit(store.write_tier, "1m", r1m, True)
+        # both writers launched against an EMPTY lineage: each sees zero
+        # completed buckets, so both attempt every bucket
+        f1 = ex.submit(store.write_tier, "1m", r1m)
+        f2 = ex.submit(store.write_tier, "1m", r1m)
         while not (f1.done() and f2.done()):
             # The load-bearing mid-write invariant (ADVICE r4): a bucket
             # listed in lineage is ALWAYS fully present on disk. Snapshot
@@ -628,36 +628,28 @@ def test_concurrent_writers_and_read_mid_write(spark, pages, tmp_path):
             assert cnt == expected[b], f"partial bucket {b} visible mid-write"
 
 
-def test_run_tiered_rollup_skew_guard_identical_output(spark, pages):
-    """VERDICT r4 item 8: skew_guard=True detects the hot url, routes the 1m
-    tier through the salted two-stage aggregation, and produces the SAME
-    tiers as the unguarded path (decomposable partials compose exactly;
-    float sums agree to addition-order tolerance)."""
-    # remap ~40% of rows onto one hot url (same construction as the bench
-    # skew probe, deterministic)
+def test_salted_two_stage_partials_match_rollup_base(spark, pages):
+    """``salt_column(hot_keys=...)`` with the detected heavy hitter, then
+    per-(url, _salt, bin) partials composed across salts, equals
+    :func:`rollup_base` bin-for-bin (decomposable partials compose exactly;
+    float sums agree to addition-order tolerance). This composition is what
+    the skewed scaling gate times."""
+    from ezmsg_sigproc_spark.plans.rollup_tiers import (
+        heavy_hitter_keys,
+        salt_column,
+    )
+
+    # remap ~40% of rows onto one hot url (same construction as the skewed
+    # scaling probe, deterministic)
     hot = (F.conv(F.substring(F.md5(F.concat_ws(
         "|", F.col("url"), F.col("warc_ts").cast("string"))), 1, 4), 16, 10)
         % 100) < 40
     skewed = pages.withColumn(
         "url", F.when(hot, F.lit("https://hot.example/p/0")).otherwise(F.col("url")))
 
-    m_guard = run_tiered_rollup(spark, skewed, skew_guard=True,
-                                hot_threshold_frac=0.05, n_salts=4,
-                                hot_sample_frac=1.0)
-    m_plain = run_tiered_rollup(spark, skewed, skew_guard=False)
-    assert m_guard["skew_guard"] and m_guard["hot_keys"] == ["https://hot.example/p/0"]
-    assert m_plain["hot_keys"] == []
-    for k in ("rows_1m", "rows_1h", "rows_1d"):
-        assert m_guard[k] == m_plain[k], k
-
-    # bin-for-bin equality of the 1m tier itself
-    from ezmsg_sigproc_spark.plans.rollup_tiers import (
-        heavy_hitter_keys,
-        salt_column,
-    )
-
     sig = pages_signal(skewed)
     hot_keys = heavy_hitter_keys(sig, "url", threshold_frac=0.05, sample_frac=1.0)
+    assert hot_keys == ["https://hot.example/p/0"]
     per_salt = (
         salt_column(sig, "url", n_salts=4, hot_keys=hot_keys)
         .withColumn("bin_m", F.floor(F.col("ts") / 60).cast("bigint"))
@@ -665,12 +657,12 @@ def test_run_tiered_rollup_skew_guard_identical_output(spark, pages):
         .agg(F.count("value").alias("n"), F.sum("value").alias("sum"),
              F.min("value").alias("min"), F.max("value").alias("max"),
              F.sum(F.col("value") * F.col("value")).alias("sum_sq")))
-    guarded = per_salt.groupBy("url", "bin_m").agg(
+    composed = per_salt.groupBy("url", "bin_m").agg(
         F.sum("n").alias("n"), F.sum("sum").alias("sum"),
         F.min("min").alias("min"), F.max("max").alias("max"),
         F.sum("sum_sq").alias("sum_sq"))
     a = rollup_base(sig, 60).toPandas().sort_values(["url", "bin_m"]).reset_index(drop=True)
-    b = guarded.toPandas().sort_values(["url", "bin_m"]).reset_index(drop=True)
+    b = composed.toPandas().sort_values(["url", "bin_m"]).reset_index(drop=True)
     assert len(a) == len(b) > 0
     pd.testing.assert_frame_equal(a[["url", "bin_m", "n", "min", "max"]],
                                   b[["url", "bin_m", "n", "min", "max"]])

@@ -102,84 +102,53 @@ def main():
         lines.append(f"| `{name}` | shuffles in plan | {n_ex} |")
         print(f"INFO  {name}: {n_ex} exchanges")
 
-    # skew_guard path (VERDICT r5 item 7): the salted two-stage 1m rollup's
-    # FIRST exchange must partition on (url, _salt, bin_m) and carry ONLY
-    # per-group partial-aggregate columns — never the raw value rows (at
-    # 10^12 rows the whole point of salting is that the hot key's raw rows
-    # never converge on one reducer); and skew_guard=False must leave the
-    # plain rollup plan untouched (no salt artifacts).
-    from pyspark.sql import functions as F
-
+    # the backfill's 1m rollup (rollup_base over pages_signal) has no salted
+    # route: a hot url is spread because the exchange is keyed on (url,
+    # bin_m) and carries map-side partials, so the url's raw value/ts rows
+    # never converge on one reducer (SCALE.md §Skew)
     from ezmsg_sigproc_spark.plans.rollup_tiers import (
         TIERS,
         pages_signal,
         rollup_base,
-        salt_column,
     )
     from ezmsg_sigproc_spark.sources.pages import generate_pages
 
-    pages = generate_pages(spark, n_urls=60, samples_per_url=200)
-    sig = pages_signal(pages)
-    per_salt = (
-        salt_column(sig, "url", n_salts=16,
-                    hot_keys=["https://hot.example/p/0"])
-        .withColumn("bin_m", F.floor(F.col("ts") / TIERS["1m"]).cast("bigint"))
-        .groupBy("url", "_salt", "bin_m")
-        .agg(F.count("value").alias("n"), F.sum("value").alias("sum"),
-             F.min("value").alias("min"), F.max("value").alias("max"),
-             F.sum(F.col("value") * F.col("value")).alias("sum_sq"))
-    )
-    composed = per_salt.groupBy("url", "bin_m").agg(
-        F.sum("n").alias("n"), F.sum("sum").alias("sum"),
-        F.min("min").alias("min"), F.max("max").alias("max"),
-        F.sum("sum_sq").alias("sum_sq"))
-    guard_plan = plan_of(composed)
+    sig = pages_signal(generate_pages(spark, n_urls=60, samples_per_url=200))
+    plain_plan = plan_of(rollup_base(sig, TIERS["1m"]))
 
-    def salted_exchange_partial_only(plan: str) -> bool:
+    def url_bin_exchange_carries_partials(plan: str) -> bool:
         found = False
         for block in plan.split("\n\n"):
             if not re.match(r"\(\d+\) Exchange", block):
                 continue
             args = re.search(r"Arguments: hashpartitioning\(([^)]*)\)", block)
-            if not args or "_salt" not in args.group(1):
+            if not args:
+                continue
+            if [a.split("#")[0] for a in args.group(1).split(", ")][:2] != ["url", "bin_m"]:
                 continue
             found = True
             inp = re.search(r"Input \[\d+\]: \[([^\]]+)\]", block)
-            cols = inp.group(1) if inp else ""
-            # raw signal columns must be gone: the exchange carries the
-            # partial n/sum/min/max/sum_sq, not value/ts rows
-            if "value#" in cols or "ts#" in cols:
-                return False
-            if not all(k in args.group(1) for k in ("url#", "_salt#", "bin_m#")):
+            cols = {c.split("#")[0] for c in (inp.group(1) if inp else "").split(", ")}
+            if cols & {"value", "ts"}:
                 return False
         return found
 
     for label, got in (
-        ("salted exchange keyed (url,_salt,bin_m), carries partials not raw rows",
-         salted_exchange_partial_only(guard_plan)),
-        ("map-side partial aggregation before the salted exchange",
-         "partial_count" in guard_plan),
-        ("compose stage re-aggregates partials (second exchange on (url,bin_m))",
-         bool(re.search(r"hashpartitioning\(url#\d+, bin_m#\d+", guard_plan))),
+        ("map-side partial aggregation (partial_count)", "partial_count" in plain_plan),
+        ("exchange on hashpartitioning(url, bin_m) carries partials, no raw value/ts column",
+         url_bin_exchange_carries_partials(plain_plan)),
     ):
         status = "PASS" if got else "FAIL"
         ok = ok and got
-        lines.append(f"| `skew_guard 1m (salted two-stage)` | {label} | {status} |")
-        print(f"{status}  skew_guard: {label}")
-
-    plain_plan = plan_of(rollup_base(sig, TIERS["1m"]))
-    got = "_salt" not in plain_plan and "pmod" not in plain_plan
-    status = "PASS" if got else "FAIL"
-    ok = ok and got
-    lines.append(
-        "| `skew_guard=False 1m` | plain rollup plan unchanged (no salt "
-        f"artifacts) | {status} |")
-    print(f"{status}  skew_guard=False: plain plan unchanged")
+        lines.append(f"| `rollup_base 1m (pages_signal)` | {label} | {status} |")
+        print(f"{status}  rollup_base 1m: {label}")
 
     # streaming ingest plans: the minhash join's per-batch candidate and
     # claims plans, with a prior claims partition to join against, and
     # drop-mode dedup have no Python node anywhere
     import tempfile
+
+    from pyspark.sql import functions as F
 
     sdir = tempfile.mkdtemp(prefix="audit_stream_")
     from ezmsg_sigproc_spark.operators.dedup import minhash_signatures
