@@ -85,44 +85,41 @@ def main() -> None:
         jvm = harness.jvm_pid(spark)
         t_session = time.monotonic()
 
-        def timed(key: str, action) -> object:
+        def timed(key: str, action, into: dict = runs) -> object:
             c0, s0 = harness.cpu_s(jvm), harness.steal_s()
             t0 = time.monotonic()
             result = action()
             wall = time.monotonic() - t0
-            runs[key].append({"wall_s": round(wall, 3),
-                              "cpu_s": round(harness.cpu_s(jvm) - c0, 2),
-                              "steal_s": round(harness.steal_s() - s0, 2)})
+            into.setdefault(key, []).append({
+                "wall_s": round(wall, 3),
+                "cpu_s": round(harness.cpu_s(jvm) - c0, 2),
+                "steal_s": round(harness.steal_s() - s0, 2)})
             return result
 
-        # each key first runs once untimed, just before its samples, so that
-        # every sample finds the key's own plan, codegen and UDF paths warm
-        warmups: dict[str, float] = {}
-
-        def untimed(key: str, action) -> object:
-            t0 = time.monotonic()
-            result = action()
-            warmups[key] = round(time.monotonic() - t0, 3)
-            return result
+        # each key first runs once untimed (its sample goes to ``warmups``),
+        # just before its samples, so that every sample finds the key's own
+        # plan, codegen and UDF paths warm
+        warmups: dict[str, list[dict]] = {}
 
         for name in HEADLINE:
             fn = query_fn(name)
-            untimed(name, lambda: fn(spark, SF_DIR).count())
+            timed(name, lambda: fn(spark, SF_DIR).count(), into=warmups)
             for _ in range(SAMPLES):
                 timed(name, lambda: fn(spark, SF_DIR).count())
 
-        def store_round(root: str, run) -> None:
-            store, tmin, tmax = run(
+        def store_round(root: str, into: dict) -> None:
+            store, tmin, tmax = timed(
                 "ca_store_write",
-                lambda: entry_queries._ca_store_build(spark, SF_DIR, root=root))
-            run("ca_store_read", lambda: read_resolution(
+                lambda: entry_queries._ca_store_build(spark, SF_DIR, root=root),
+                into=into)
+            timed("ca_store_read", lambda: read_resolution(
                 store, 7200, t0=tmin + 4000.0, t1=tmax - 4000.0).agg(
-                    F.count("*"), F.sum("sum")).collect())
+                    F.count("*"), F.sum("sum")).collect(), into=into)
             shutil.rmtree(root, ignore_errors=True)
 
-        store_round(st.path("out", "ca_store_warmup"), untimed)
+        store_round(st.path("out", "ca_store_warmup"), warmups)
         for i in range(SAMPLES):
-            store_round(st.path("out", f"ca_store_{i}"), timed)
+            store_round(st.path("out", f"ca_store_{i}"), runs)
         spark.stop()
         elapsed = time.monotonic() - t_start
     finally:
@@ -152,7 +149,8 @@ def main() -> None:
     }
     full = {**summary, "settings": st.describe(),
             "session_s": round(t_session - t_start, 2),
-            "warmup_s": warmups, "keys": keys}
+            "warmup_s": {k: rr[0]["wall_s"] for k, rr in warmups.items()},
+            "keys": keys}
     with open(out_path, "w") as f:
         json.dump(full, f, indent=1)
         f.write("\n")

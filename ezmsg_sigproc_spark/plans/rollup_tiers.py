@@ -147,26 +147,35 @@ class RollupStore:
         return [f for f in os.listdir(self.lineage_dir)
                 if f.endswith(".parquet") and not f.startswith((".", "_"))]
 
-    def completed_buckets(self, tier: str) -> set[int]:
+    def _lineage_rows(self, tier: str, columns: list[str]) -> set[tuple]:
         # lineage is driver-side metadata (a few hundred tiny rows): read the
         # visible files directly with pyarrow instead of launching a Spark
         # read job — the old Spark path cost 0.2-0.5 s of job round trips per
         # write_tier commit at sf0.1, pyarrow ~10 ms (the same asymmetry as
         # _write_lineage, which always wrote with pyarrow).
         while True:
-            out: set[int] = set()
+            out: set[tuple] = set()
             try:
                 for f in self._lineage_files():
                     t = pq.read_table(os.path.join(self.lineage_dir, f),
-                                      columns=["tier", "ts_bucket"])
-                    out.update(
-                        t.filter(pc.equal(t.column("tier"), tier))
-                        .column("ts_bucket").to_pylist())
+                                      columns=["tier", *columns])
+                    t = t.filter(pc.equal(t.column("tier"), tier))
+                    out.update(zip(*(t.column(c).to_pylist() for c in columns)))
                 return out
             except FileNotFoundError:
                 # a concurrent reopen_buckets deleted a listed file; the
                 # file replacing it was written first, so a re-list sees it
                 continue
+
+    def completed_buckets(self, tier: str) -> set[int]:
+        return {b for (b,) in self._lineage_rows(tier, ["ts_bucket"])}
+
+    def commits(self, tier: str) -> set[tuple[int, float]]:
+        """``(ts_bucket, written_at)`` of each committed bucket of ``tier``.
+        Unlike :meth:`completed_buckets` this changes when a bucket is
+        reopened and written again, so it tells whether an output derived
+        from the tier is still current."""
+        return self._lineage_rows(tier, ["ts_bucket", "written_at"])
 
     def _write_lineage(self, table: pa.Table):
         # write-temp + atomic rename: a concurrent completed_buckets read

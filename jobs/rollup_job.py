@@ -31,10 +31,14 @@ def run(spark, pages, out: str, *, compress_1m: str | None = None,
     returns the metrics dict.
 
     ``compress_1m``: also write the stored 1m tier as Gorilla blocks at this
-    path (overwritten) when this run wrote a 1m bucket or the path holds no
-    complete write; the summary is aggregated from the blocks on disk, so the
-    tier is encoded and verified at most once per run. ``retain_1m_hours``:
-    then drop the 1m hour buckets older than the newest N (N ≥ 1)."""
+    path (overwritten), then the 1m lineage commits they encode under
+    ``<compress_1m>/_encoded_1m``. The tier is encoded again only when the
+    store has a commit that list lacks (a bucket written, or reopened and
+    written again, since), so a resumed run that adds no hour keeps the
+    blocks. The summary is aggregated from the blocks on disk, so the tier
+    is encoded and verified at most once per run. ``retain_1m_hours``: then
+    drop the 1m hour buckets older than the newest N (N ≥ 1)."""
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
     from ezmsg_sigproc_spark.plans.rollup_tiers import (
@@ -49,10 +53,21 @@ def run(spark, pages, out: str, *, compress_1m: str | None = None,
     metrics = run_tiered_rollup(spark, pages, store=store)
 
     if compress_1m:
-        if (metrics["write_1m"]["buckets_written"]
-                or not os.path.exists(os.path.join(compress_1m, "_SUCCESS"))):
+        marker = os.path.join(compress_1m, "_encoded_1m")
+        commits = store.commits("1m")
+        try:
+            encoded = {(r.ts_bucket, r.written_at)
+                       for r in spark.read.parquet(marker).collect()}
+        except AnalysisException:  # no complete encode at this path
+            encoded = None
+        if encoded is None or not commits <= encoded:
+            # the overwrite deletes the old marker first, so a run killed
+            # before the new one is written encodes again
             (gorilla_blobs_1m(store.read_tier("1m").drop("ts_bucket"))
              .write.mode("overwrite").partitionBy("bucket").parquet(compress_1m))
+            (spark.createDataFrame(sorted(commits),
+                                   "ts_bucket bigint, written_at double")
+             .coalesce(1).write.parquet(marker))
         agg = spark.read.parquet(compress_1m).agg(
             F.sum("n_points").alias("np"), F.sum("ts_bytes").alias("tb"),
             F.sum("val_bytes").alias("vb"),
@@ -82,7 +97,8 @@ def main(argv=None):
                          "(N >= 1)")
     ap.add_argument("--compress-1m", default=None, metavar="PATH",
                     help="also persist the 1m tier as Gorilla blocks "
-                         "(url, ts_bucket, ts_blob, val_blob, …) at PATH")
+                         "(url, bucket, ts_blob, val_blob, …), keyed by "
+                         "(url, day bucket), at PATH")
     ap.add_argument("--cores", type=int, default=None, help="local mode cores")
     args = ap.parse_args(argv)
 

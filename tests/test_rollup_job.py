@@ -43,6 +43,39 @@ def test_rollup_job_compress_retain_and_resume(spark, tmp_path):
     assert m3["compress_1m"] == m1["compress_1m"]
 
 
+def test_rollup_job_encodes_hours_committed_by_an_interrupted_run(
+        spark, tmp_path, monkeypatch):
+    """A run that commits new 1m hours and dies before its encode leaves the
+    earlier blocks on disk. The resumed run writes no 1m bucket, and must
+    still encode the new hours."""
+    from pyspark.sql import functions as F
+
+    pages = generate_pages(spark, n_urls=20, samples_per_url=4000)
+    ts = F.col("warc_ts").cast("double")
+    first_hour_end = (int(pages.agg(F.min(ts)).first()[0]) // 3600 + 1) * 3600
+    out, blobs = str(tmp_path / "lake"), str(tmp_path / "blobs")
+    m1 = run(spark, pages.where(ts < first_hour_end), out, compress_1m=blobs)
+    assert m1["write_1m"]["buckets_written"] == 1
+
+    write_tier = RollupStore.write_tier
+
+    def die_after_1m(self, tier, rollup):
+        if tier == "1h":
+            raise RuntimeError("killed after the 1m commit")
+        return write_tier(self, tier, rollup)
+
+    monkeypatch.setattr(RollupStore, "write_tier", die_after_1m)
+    with pytest.raises(RuntimeError, match="killed"):
+        run(spark, pages, out, compress_1m=blobs)
+    monkeypatch.setattr(RollupStore, "write_tier", write_tier)
+
+    m3 = run(spark, pages, out, compress_1m=blobs)
+    assert m3["write_1m"]["buckets_written"] == 0
+    assert m3["compress_1m"]["roundtrip_ok"]
+    assert m3["compress_1m"]["points"] == m3["rows_1m"]
+    assert m3["compress_1m"]["points"] > m1["compress_1m"]["points"]
+
+
 def test_rollup_job_rejects_retention_below_one_hour(spark, tmp_path):
     """``retain_1m_hours=0`` once took ``done[-0] == done[0]`` as the cutoff
     and silently kept every bucket."""
