@@ -110,9 +110,9 @@ def ewma(
 ) -> DataFrame:
     """Bias-corrected EWMA per key along time (reference EWMATransformer).
 
-    ``num_partitions`` pins the key-repartition width (default: the
-    serieslift core-count heuristic); the scaling probe passes a constant so
-    both parallelism levels run the identical physical job."""
+    ``num_partitions`` pins the key-repartition width (default: sized by
+    the data, see ``serieslift.map_key_batches``); the scaling probe passes
+    a constant so both parallelism levels run the identical physical job."""
     if alpha is None:
         if tau is None or dt is None:
             raise ValueError("give alpha, or tau and dt")

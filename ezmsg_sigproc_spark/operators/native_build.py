@@ -20,7 +20,9 @@ Python; the C is the speed mirror) and calls :func:`load` once. Contract:
 
 :func:`java_classes` builds the JVM side's one Java class (the fork-free
 local filesystem ``session.get_spark`` installs) into the same cache,
-under the same checks, with the same never-raise contract.
+under the same checks, with the same never-raise contract; so does
+:func:`resource_dir`, the directory of classpath resources ``get_spark``
+puts ahead of Spark's jars (an empty ``yarn-default.xml``).
 """
 
 from __future__ import annotations
@@ -84,6 +86,35 @@ def load(name: str, src: str, env_flag: str):
         return None
 
 
+def _private_dir(name: str, key: str, build, fallback: str):
+    """Build-or-reuse the cached directory keyed by ``key``: ``build(out)``
+    creates ``out`` and fills it. Returns the directory, or None (after one
+    stderr line naming ``name`` and ``fallback``) when the build fails or
+    any entry in it is not private to this uid. Never raises."""
+    try:
+        out = cache_path(name, key)
+        if not os.path.exists(out):
+            with tempfile.TemporaryDirectory(dir=os.path.dirname(out)) as td:
+                built = os.path.join(td, "out")
+                build(built)
+                for root, dirs, files in os.walk(built):
+                    os.chmod(root, 0o700)  # whatever the umask
+                    for fn in files:
+                        os.chmod(os.path.join(root, fn), 0o600)
+                try:
+                    os.rename(built, out)
+                except OSError:
+                    if not os.path.isdir(out):  # else a concurrent build won
+                        raise
+        for root, dirs, files in os.walk(out):
+            for p in [root, *(os.path.join(root, fn) for fn in files)]:
+                _check_private(p, 0o022)
+        return out
+    except Exception as e:
+        sys.stderr.write(f"{name} unavailable ({e!r}); {fallback}\n")
+        return None
+
+
 def java_classes(name: str, src: str, classpath: str, fallback: str):
     """Compile-or-reuse the Java source ``src`` of public class ``name``
     against ``classpath``; returns the classes directory (a classpath
@@ -95,37 +126,33 @@ def java_classes(name: str, src: str, classpath: str, fallback: str):
     JAVA_HOME is set (the JVM Spark launches), else the one on PATH;
     ``--release 17`` keeps the classes loadable by any JVM Spark 4 runs on.
     """
-    try:
-        key = src + "\0" + os.pathsep.join(
-            os.path.basename(p) for p in classpath.split(os.pathsep))
-        out = cache_path(name, key)
-        if not os.path.exists(out):
-            with tempfile.TemporaryDirectory(dir=os.path.dirname(out)) as td:
-                java = os.path.join(td, f"{name}.java")
-                with open(java, "w") as f:
-                    f.write(src)
-                classes = os.path.join(td, "classes")
-                home = os.environ.get("JAVA_HOME")
-                javac = os.path.join(home, "bin", "javac") if home else "javac"
-                # C1 and serial GC halve javac's CPU time for one small file
-                subprocess.run([javac, "-J-XX:TieredStopAtLevel=1",
-                                "-J-XX:+UseSerialGC", "--release", "17",
-                                "-proc:none", "-nowarn", "-cp", classpath,
-                                "-d", classes, java],
-                               check=True, capture_output=True, timeout=120)
-                for root, dirs, files in os.walk(classes):
-                    os.chmod(root, 0o700)  # whatever the umask
-                    for fn in files:
-                        os.chmod(os.path.join(root, fn), 0o600)
-                try:
-                    os.rename(classes, out)
-                except OSError:
-                    if not os.path.isdir(out):  # else a concurrent build won
-                        raise
-        for root, dirs, files in os.walk(out):
-            for p in [root, *(os.path.join(root, fn) for fn in files)]:
-                _check_private(p, 0o022)
-        return out
-    except Exception as e:
-        sys.stderr.write(f"{name} unavailable ({e!r}); {fallback}\n")
-        return None
+    def build(classes):
+        java = os.path.join(os.path.dirname(classes), f"{name}.java")
+        with open(java, "w") as f:
+            f.write(src)
+        home = os.environ.get("JAVA_HOME")
+        javac = os.path.join(home, "bin", "javac") if home else "javac"
+        # C1 and serial GC halve javac's CPU time for one small file
+        subprocess.run([javac, "-J-XX:TieredStopAtLevel=1",
+                        "-J-XX:+UseSerialGC", "--release", "17",
+                        "-proc:none", "-nowarn", "-cp", classpath,
+                        "-d", classes, java],
+                       check=True, capture_output=True, timeout=120)
+
+    key = src + "\0" + os.pathsep.join(
+        os.path.basename(p) for p in classpath.split(os.pathsep))
+    return _private_dir(name, key, build, fallback)
+
+
+def resource_dir(name: str, files: dict[str, str], fallback: str):
+    """A classpath directory holding ``files`` (file name -> text), in the
+    same cache under the same checks as :func:`java_classes`; None when
+    unavailable. Never raises."""
+    def build(out):
+        os.mkdir(out)
+        for fn, text in files.items():
+            with open(os.path.join(out, fn), "w") as f:
+                f.write(text)
+
+    key = "\0".join(f"{fn}\0{text}" for fn, text in sorted(files.items()))
+    return _private_dir(name, key, build, fallback)

@@ -56,19 +56,18 @@ def map_key_batches(
     ``apply_matrix_kernel`` and the Gorilla block encoder.
     """
     key_cols = list(key_cols)
+    # Unpinned, the data sizes the stage: the session's shuffle width, which
+    # AQE coalesces down to its 64 KB minPartitionSize floor (session.py).
+    # Each partition is a Python task with a fixed worker CPU cost whatever
+    # its size (~20 ms with the zip guard), which a fixed width pays for
+    # nothing on small inputs; the floor keeps a mid-size IIR/EWMA stage at
+    # core width, not one serial task. Callers needing a fixed fan-out (the
+    # scaling probe) pin num_partitions.
     if num_partitions is None:
-        # one partition per core, not 2×: every partition is a Python-stage
-        # task with a fixed worker CPU cost regardless of size (session.py:
-        # ~20 ms per task with the package's zip guard, ~0.2 s without), so
-        # oversubscription doubles that cost for balance the skew
-        # paths (salted_repartition, the pivot cap) already provide
-        # explicitly. At cluster scale partitions-per-core stays the unit the
-        # AQE parallelismFirst floor targets; callers needing a wider fan-out
-        # pin num_partitions.
-        num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    arranged = df.repartition(num_partitions, *key_cols).sortWithinPartitions(
-        *key_cols, ts_col
-    )
+        arranged = df.repartition(*key_cols)
+    else:
+        arranged = df.repartition(num_partitions, *key_cols)
+    arranged = arranged.sortWithinPartitions(*key_cols, ts_col)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None

@@ -268,10 +268,13 @@ class RollupStore:
         # GC, the 1m tier cached), writing those 337 files cost a median
         # 3.2 CPU-s against 2.1 CPU-s for the pyarrow writer. A JFR profile
         # puts ~3/4 of the executor samples in the per-file writer set-up
-        # and close: ParquetOutputFormat.getRecordWriter, whose
-        # ColumnConfigParser walks the whole ~1,080-key Hadoop conf, and the
-        # per-file codec streams. Fewer, larger files or a smaller conf
-        # would cut it. Crash-consistency is unchanged: the counts are read
+        # and close: ParquetOutputFormat.getRecordWriter, whose JobConf copy
+        # and ColumnConfigParser walk the whole Hadoop conf, and the
+        # per-file codec streams. get_spark's empty yarn-default.xml halves
+        # that conf (1,078 -> 558 keys); in a JFR of one traced perfbench
+        # backfill (local[4]) the two went from 14.2 % to 11.5 % of the
+        # driver's samples. Fewer, larger files would cut the rest.
+        # Crash-consistency is unchanged: the counts are read
         # only after the write job has committed every staged file, and
         # lineage still commits strictly after the bucket-dir renames below.
         try:

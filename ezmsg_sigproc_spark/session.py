@@ -34,6 +34,20 @@ ownership checks fail, it writes one stderr line and Spark keeps its stock
 filesystem. So does a job under spark-submit, where the JVM is already
 running: there every Spark write forks ``chmod`` per file, the
 ``RollupStore`` bucket write (``plans/rollup_tiers.py``) included.
+
+Under the same launch rule, and from the same kernel cache with the same
+ownership checks, the driver classpath gets an empty ``yarn-default.xml``
+ahead of Spark's jars. ``JobConf``'s static initializer
+(``ConfigUtil.loadResources``, hadoop-client-api 3.4.2) adds
+``yarn-default.xml`` as a default resource of every Hadoop
+``Configuration``, so each conf a task deserializes
+(``SerializableConfiguration``) and each parquet writer copies
+(``JobConf``) and walks (``ColumnConfigParser``) carried YARN's 520
+defaults. Shadowing them is safe in local mode: only YARN's own client and
+server classes read them, and a local-mode driver never loads those. The
+session's Hadoop conf went from 1,078 keys (545 ``yarn.*``) to 558 (25).
+A job under spark-submit, on YARN or not, keeps the jar's file, as does
+any job when the directory cannot be made private (one stderr line).
 """
 
 from __future__ import annotations
@@ -84,13 +98,8 @@ def _local_fs_sources() -> tuple[str, str]:
 def _local_fs_conf() -> dict:
     """Spark conf that installs the fork-free ``file://`` filesystem
     (``jvm/NoForkLocalFileSystem.java``), built into the per-user kernel
-    cache. Empty when this process does not launch the driver JVM (a
-    gateway is running, or spark-submit started this Python): the classes
-    cannot join a running JVM's classpath, and naming them anyway fails
-    every file operation with ClassNotFoundException. Empty, after one
-    stderr line, when they cannot be built."""
-    if not _launches_jvm():
-        return {}
+    cache. Empty, after one stderr line, when the classes cannot be
+    built."""
     fallback = "using Hadoop's stock local filesystem"
     try:
         src, classpath = _local_fs_sources()
@@ -105,6 +114,33 @@ def _local_fs_conf() -> dict:
         "spark.hadoop.fs.file.impl": _LOCAL_FS,
         "spark.hadoop.fs.AbstractFileSystem.file.impl": _LOCAL_FS + "$Fs",
     }
+
+
+def _no_yarn_defaults() -> str | None:
+    """A classpath directory whose ``yarn-default.xml`` is empty, in the
+    per-user kernel cache; None, after one stderr line, when it cannot be
+    made private."""
+    return native_build.resource_dir(
+        "NoYarnDefaults", {"yarn-default.xml": "<configuration/>\n"},
+        "Hadoop confs keep yarn-default.xml's keys")
+
+
+def _launch_conf() -> dict:
+    """Spark conf for a driver JVM this process launches: the fork-free
+    ``file://`` filesystem (:func:`_local_fs_conf`) and, ahead of Spark's
+    jars on the driver classpath, an empty ``yarn-default.xml`` from the
+    same kernel cache. Empty when this process does not launch the driver
+    JVM (a gateway is running, or spark-submit started this Python): a
+    classpath entry cannot join a running JVM, and naming the classes
+    anyway fails every file operation with ClassNotFoundException."""
+    if not _launches_jvm():
+        return {}
+    conf = _local_fs_conf()
+    lean = _no_yarn_defaults()
+    if lean is not None:
+        cp = conf.get("spark.driver.extraClassPath")
+        conf["spark.driver.extraClassPath"] = lean + (os.pathsep + cp if cp else "")
+    return conf
 
 
 def get_spark(
@@ -156,7 +192,7 @@ def get_spark(
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
-    conf = _local_fs_conf()
+    conf = _launch_conf()
     for k, v in (extra_conf or {}).items():
         if k == "spark.driver.extraClassPath" and k in conf:
             v = conf[k] + os.pathsep + v

@@ -245,15 +245,19 @@ def streaming_exact_join(
         try:
             mins = b.groupBy("content_h").agg(F.min("id").alias("first_id"),
                                               *table.last_ts())
-            firsts = table.resolve(mins, batch_id)
-            is_dup = F.col("id") != F.col("first_id")
-            verdict = b.join(firsts, "content_h").select(
-                "id", "content_h", is_dup.alias("is_dup"),
-                F.when(is_dup, F.col("first_id")).otherwise(F.lit(""))
-                .alias("dup_of"))
-            verdict.write.mode("overwrite").parquet(
-                os.path.join(report_sink, f"batch_id={batch_id}"))
-            table.append(firsts, batch_id)
+            # the verdict and the claims both read it: one claims read + join
+            firsts = table.resolve(mins, batch_id).persist()
+            try:
+                is_dup = F.col("id") != F.col("first_id")
+                verdict = b.join(firsts, "content_h").select(
+                    "id", "content_h", is_dup.alias("is_dup"),
+                    F.when(is_dup, F.col("first_id")).otherwise(F.lit(""))
+                    .alias("dup_of"))
+                verdict.write.mode("overwrite").parquet(
+                    os.path.join(report_sink, f"batch_id={batch_id}"))
+                table.append(firsts, batch_id)
+            finally:
+                firsts.unpersist()
         finally:
             b.unpersist()
 

@@ -46,14 +46,21 @@ def streaming_rollup_1m(pages_stream: DataFrame, watermark: str = "2 minutes") -
 def write_gorilla_batch(batch_df: DataFrame, batch_id: int, blobs_path: str) -> None:
     """Idempotent per-micro-batch Gorilla compaction sink: encode the batch's
     closed 1m windows and OVERWRITE ``<blobs_path>/batch_id=<id>``. Re-running
-    the same batch_id (foreachBatch retry) replaces, never duplicates."""
+    the same batch_id (foreachBatch retry) replaces, never duplicates.
+
+    The batch is persisted for the emptiness check and the write: without
+    it the check's partitions run the stateful aggregation a second time."""
     from ..plans.rollup_tiers import gorilla_blobs_1m
 
-    if batch_df.isEmpty():
-        return
-    gorilla_blobs_1m(batch_df).write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{blobs_path}/batch_id={batch_id}"
-    )
+    b = batch_df.persist()
+    try:
+        if b.isEmpty():
+            return
+        gorilla_blobs_1m(b).write.mode("overwrite").partitionBy("bucket").parquet(
+            f"{blobs_path}/batch_id={batch_id}"
+        )
+    finally:
+        b.unpersist()
 
 
 def streaming_rollup_to_gorilla(

@@ -31,12 +31,15 @@ def run(spark, pages, out: str, *, compress_1m: str | None = None,
     returns the metrics dict.
 
     ``compress_1m``: also write the stored 1m tier as Gorilla blocks at this
-    path (overwritten), then the 1m lineage commits they encode under
-    ``<compress_1m>/_encoded_1m``. The tier is encoded again only when the
-    store has a commit that list lacks (a bucket written, or reopened and
-    written again, since), so a resumed run that adds no hour keeps the
-    blocks. The summary is aggregated from the blocks on disk, so the tier
-    is encoded and verified at most once per run. ``retain_1m_hours``: then
+    path, one per (url, day ``bucket``), then the 1m lineage commits they
+    encode under ``<compress_1m>/_encoded_1m``. Only the days holding a
+    commit that list lacks (an hour written, or reopened and written again,
+    since) are encoded, from the hours the store holds, and only their
+    ``bucket`` partitions are overwritten: the blocks of other days,
+    expired hours included, stay as they are. A day that gains an hour
+    after some of its hours expired is encoded from the retained hours
+    only. The summary is aggregated from the blocks on disk, so each day is
+    encoded and verified at most once per run. ``retain_1m_hours``: then
     drop the 1m hour buckets older than the newest N (N ≥ 1)."""
     from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
@@ -59,15 +62,22 @@ def run(spark, pages, out: str, *, compress_1m: str | None = None,
             encoded = {(r.ts_bucket, r.written_at)
                        for r in spark.read.parquet(marker).collect()}
         except AnalysisException:  # no complete encode at this path
-            encoded = None
-        if encoded is None or not commits <= encoded:
-            # the overwrite deletes the old marker first, so a run killed
-            # before the new one is written encodes again
-            (gorilla_blobs_1m(store.read_tier("1m").drop("ts_bucket"))
-             .write.mode("overwrite").partitionBy("bucket").parquet(compress_1m))
+            encoded = set()
+        # 1m buckets are hours, blocks are days: re-encode only the days
+        # holding a commit the blobs lack, and overwrite only those days'
+        # partitions, so the blocks of expired hours in other days stay
+        days = sorted({b // 24 for b, _ in commits - encoded})
+        if days:
+            hours = store.read_tier("1m").where(
+                F.floor(F.col("ts_bucket") / 24).isin(days))
+            (gorilla_blobs_1m(hours.drop("ts_bucket"))
+             .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+             .partitionBy("bucket").parquet(compress_1m))
+            # written after the blocks: a run killed in between encodes the
+            # same days again
             (spark.createDataFrame(sorted(commits),
                                    "ts_bucket bigint, written_at double")
-             .coalesce(1).write.parquet(marker))
+             .coalesce(1).write.mode("overwrite").parquet(marker))
         agg = spark.read.parquet(compress_1m).agg(
             F.sum("n_points").alias("np"), F.sum("ts_bytes").alias("tb"),
             F.sum("val_bytes").alias("vb"),

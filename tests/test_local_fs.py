@@ -341,3 +341,66 @@ def test_get_spark_keeps_stock_filesystem_on_failure(tmp_path, monkeypatch, case
     assert out["afs"] == "org.apache.hadoop.fs.local.LocalFs"
     assert out["rows"] == 100
     assert err.count(FALLBACK_LINE) == 1, err[-3000:]
+
+
+# -- the lean Hadoop conf: an empty yarn-default.xml ahead of Spark's jars --
+
+_LEAN_SCRIPT = """
+    import json
+    from ezmsg_sigproc_spark.session import get_spark
+
+    spark = get_spark(cores=2, shuffle_partitions=2)
+    conf = spark._jsc.hadoopConfiguration()
+    print(json.dumps({
+        "keys": conf.size(),
+        "rm": conf.get("yarn.resourcemanager.address"),
+        "fs_impl": conf.get("fs.file.impl"),
+        "committer": conf.get("mapreduce.fileoutputcommitter.algorithm.version"),
+    }))
+"""
+
+
+def test_session_hadoop_conf_has_no_yarn_defaults(tmp_path):
+    out, _ = _run(_LEAN_SCRIPT, tmp_path)
+    assert out["keys"] < 600  # 1,078 with the jar's yarn-default.xml
+    assert out["rm"] is None
+    assert out["fs_impl"] == (NOFORK if HAVE_JAVAC else None)
+    assert out["committer"] == "1"
+
+
+def test_running_gateway_gets_no_classpath_entry(spark, monkeypatch):
+    """The ``spark`` fixture's JVM is running: get_spark's launch conf is
+    empty, and nothing is built for it."""
+    def unreachable(*a, **k):
+        raise AssertionError("built a classpath entry for a running JVM")
+
+    monkeypatch.setattr(native_build, "resource_dir", unreachable)
+    monkeypatch.setattr(native_build, "java_classes", unreachable)
+    assert session._launch_conf() == {}
+
+
+def test_builds_private_resource_dir(private_tmp):
+    out = session._no_yarn_defaults()
+    assert out is not None
+    assert os.path.dirname(out) == str(private_tmp / f"ezsp-native-{os.getuid()}")
+    assert os.listdir(out) == ["yarn-default.xml"]
+    with open(os.path.join(out, "yarn-default.xml")) as f:
+        assert f.read() == "<configuration/>\n"
+    for p in [out, os.path.join(out, "yarn-default.xml")]:
+        assert os.stat(p).st_mode & 0o077 == 0, p
+    assert session._no_yarn_defaults() == out
+
+
+def test_shared_cache_dir_gives_no_resource_dir(private_tmp, capsys):
+    d = private_tmp / f"ezsp-native-{os.getuid()}"
+    d.mkdir(mode=0o777)
+    os.chmod(d, 0o777)
+    assert session._no_yarn_defaults() is None
+    assert capsys.readouterr().err.count("NoYarnDefaults unavailable") == 1
+
+
+@pytest.mark.parametrize("mode", [0o664, 0o646])
+def test_writable_resource_file_gives_no_resource_dir(private_tmp, mode):
+    out = session._no_yarn_defaults()
+    os.chmod(os.path.join(out, "yarn-default.xml"), mode)
+    assert session._no_yarn_defaults() is None

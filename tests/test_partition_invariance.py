@@ -40,7 +40,38 @@ def test_operators_partition_invariant(sig, npart):
         lambda d: downsample(d, 3),
         lambda d: binned_aggregate(d, 5.0, 2.0, ["count", "min", "max", "mean"]),
         lambda d: ewma(d, alpha=0.35),
+        lambda d: ewma(d, alpha=0.35, num_partitions=5),
         lambda d: resample_linear(d, 7.0),
     ):
         a, b = _canon(op(part)), _canon(op(base))
         pd.testing.assert_frame_equal(a, b)
+
+
+def test_gorilla_python_stage_sized_by_its_data(spark):
+    """Each Python task costs its worker a fixed amount of CPU, so a few
+    hundred points run at most the session's shuffle width of them, fewer
+    than the fixture's 8 cores; a pinned num_partitions keeps its width."""
+    from ezmsg_sigproc_spark.operators.compression import gorilla_compress
+
+    pts = spark.range(300).selectExpr("concat('k', id % 60) AS key",
+                                      "CAST(id AS double) AS ts", "sin(id) AS value")
+
+    def python_tasks(**kw):
+        tasks = spark.sparkContext.accumulator(0)
+
+        def count(batches):  # runs in the encoder's tasks, once per task
+            tasks.add(1)
+            for b in batches:
+                yield b[["key", "n_points"]]
+
+        out = gorilla_compress(pts, **kw).mapInPandas(count, "key string, n_points bigint")
+        assert out.agg(F.sum("n_points")).first()[0] == 300
+        return tasks.value
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        assert 1 <= python_tasks() <= 4
+        assert python_tasks(num_partitions=6) == 6
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

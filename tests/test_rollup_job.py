@@ -84,3 +84,37 @@ def test_rollup_job_rejects_retention_below_one_hour(spark, tmp_path):
         run(spark, generate_pages(spark, n_urls=2, samples_per_url=10), out,
             retain_1m_hours=0)
     assert not os.path.exists(out)
+
+
+def test_rollup_job_keeps_blocks_of_expired_hours(spark, tmp_path):
+    """A run that commits new 1m hours encodes only the days holding them:
+    the blocks of the hours earlier runs retired stay on disk."""
+    from pyspark.sql import functions as F
+
+    pages = generate_pages(spark, n_urls=20, samples_per_url=4000)
+    out, blobs = str(tmp_path / "lake"), str(tmp_path / "blobs")
+
+    def days():
+        return {d: sorted((f, os.stat(os.path.join(blobs, d, f)).st_mtime_ns)
+                          for f in os.listdir(os.path.join(blobs, d)))
+                for d in os.listdir(blobs) if d.startswith("bucket=")}
+
+    def points():
+        return {r.bucket: r.np for r in spark.read.parquet(blobs).groupBy("bucket")
+                .agg(F.sum("n_points").alias("np")).collect()}
+
+    m1 = run(spark, pages, out, compress_1m=blobs, retain_1m_hours=2)
+    assert len(m1["retention_dropped_1m"]) > 0
+    days1, points1 = days(), points()
+    assert len(days1) == 1 and sum(points1.values()) == m1["rows_1m"]
+
+    next_day = pages.withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
+    m2 = run(spark, next_day, out, compress_1m=blobs, retain_1m_hours=2)
+    assert m2["write_1m"]["buckets_written"] == m1["write_1m"]["buckets_written"]
+    days2, points2 = days(), points()
+    assert set(days2) == set(days1) | {f"bucket={b + 1}" for b in points1}
+    for d, files in days1.items():  # the earlier day is not re-encoded
+        assert days2[d] == files
+    assert points2 == {**points1, **{b + 1: n for b, n in points1.items()}}
+    assert m2["compress_1m"]["points"] == m1["rows_1m"] + m2["rows_1m"]
+    assert m2["compress_1m"]["roundtrip_ok"]

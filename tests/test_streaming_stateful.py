@@ -245,3 +245,33 @@ def test_write_gorilla_batch_idempotent_on_retry(spark, tmp_path):
         ts_col="ts", value_col="value",
     ).toPandas()
     assert len(back2) == 10
+
+
+def test_write_gorilla_batch_evaluates_each_row_once(spark, tmp_path):
+    """The emptiness check and the write share one evaluation of the batch;
+    in a streaming query a second one runs the stateful aggregation again.
+    Evaluations are counted in a file: a task the check's limit cuts short
+    never reports its accumulator updates."""
+    from pyspark.sql import functions as F
+
+    from ezmsg_sigproc_spark.streaming.stream_rollup import write_gorilla_batch
+
+    log = str(tmp_path / "evals")
+
+    def keep(v):
+        with open(log, "a") as f:
+            f.write(".")
+        return True
+
+    counted = F.udf(keep, "boolean").asNondeterministic()
+    n = 60
+    pdf = pd.DataFrame({"url": [f"u{i % 3}" for i in range(n)],
+                        "bin_m": np.arange(n), "n": 1.0,
+                        "sum": np.arange(n, dtype=float)})
+    batch = (spark.createDataFrame(pdf, "url string, bin_m bigint, n double, sum double")
+             .repartition(4).where(counted("sum")))
+    path = str(tmp_path / "blobs")
+    write_gorilla_batch(batch, 0, path)
+    with open(log) as f:
+        assert len(f.read()) == n
+    assert spark.read.parquet(path).agg(F.sum("n_points")).first()[0] == n
